@@ -34,11 +34,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from datas_spark.functions.text import (
-    hashed_shingles_of_hashes,
-    token_count,
-    word_tokens,
-)
+from datas_spark.functions.text import token_count, word_tokens
+from datas_spark.operators.dedup import _shingle_frame
 
 __all__ = [
     "ngram_contamination",
@@ -86,15 +83,8 @@ def _doc_shingle_hashes(df: DataFrame, id_col: str, text_col: str, n: int) -> Da
     """(id, shingle_hash) pairs, DISTINCT per doc — hash-of-token-hashes
     so no gram string is ever materialized (same discipline as
     ``dedup.ngram_jaccard_pairs``)."""
-    sh = (
-        df.select(F.col(id_col).alias("__id"), word_tokens(text_col).alias("__toks"))
-        .select("__id", F.transform("__toks", lambda t: F.xxhash64(t)).alias("__th"))
-        .select(
-            "__id",
-            # helper output is already distinct — no extra array_distinct
-            hashed_shingles_of_hashes(F.col("__th"), n).alias("__sh"),
-        )
-    )
+    # shingle arrays are already distinct — no extra array_distinct
+    sh = _shingle_frame(df, id_col, text_col, n)
     # explode_outer + null filter: plain explode would clone the shingle
     # HOF tree into a pushed-down filter (round-1 landmine)
     return sh.select("__id", F.explode_outer("__sh").alias("__s")).where(

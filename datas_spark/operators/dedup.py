@@ -12,10 +12,12 @@ operator family. All variants here are shuffle-conscious:
            a tiny key, O(n·bands) shuffle rows — never a cross join.
 - SimHash: 32-bit bit-majority signature; near-dups share signature or
            differ in few bits.
-- n-gram Jaccard: explode shingles → self-equi-join on shingle →
-           count per pair / union — exact, but pair cardinality bounded
-           by shared-shingle blocking (plus a frequency cap to kill
-           hot-shingle skew).
+- n-gram Jaccard: explode shingles → inverted index (one groupBy on
+           the shingle hash) → upper triangle of each posting list
+           generated map-side → count per pair / union — exact, but
+           pair cardinality bounded by shared-shingle blocking (plus a
+           frequency cap to kill hot-shingle skew). Every exact pair
+           operator here shares that fan (``_posting_pairs``).
 - embedding cosine: blocked self-join within a blocking key.
 
 Hash discipline: hashes whose VALUES are query output (MinHash
@@ -520,6 +522,103 @@ def simhash(df: DataFrame, text_col: str, bits: int = 32) -> DataFrame:
     )
 
 
+def _shingle_frame(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """``(__id, __sh)``: each doc's distinct word n-gram shingles as
+    64-bit hashes. Each token is hashed once and every gram position
+    combines n token hashes with one xxhash64 over longs — no gram
+    string is ever built, and the shingle key shuffles as an 8-byte
+    long. The hash is INTERNAL (set membership only), so it needs no
+    DuckDB twin; collision odds ~d²/2⁶⁵ are negligible at any corpus
+    size. One projection per select: each array is projected before the
+    next HOF consumes it (lambda subtrees re-evaluate per element — see
+    the ``hashed_shingles_of_hashes`` PERF note)."""
+    return (
+        df.select(F.col(id_col).alias("__id"), word_tokens(text_col).alias("__toks"))
+        .select("__id", F.transform("__toks", lambda t: F.xxhash64(t)).alias("__th"))
+        .select("__id", hashed_shingles_of_hashes(F.col("__th"), n).alias("__sh"))
+    )
+
+
+def _upper_triangle(arr: Column, emit, keep=None) -> Column:
+    """Every pair of a sorted posting list ``arr`` as one flat array of
+    ``emit(x, y)``, x before y in the list; ``keep(x, y)`` prunes a pair
+    before it is built. Generated map-side: callers explode it behind an
+    explode barrier, so only emitted pairs ever reach a shuffle."""
+
+    def row(x, i):
+        rest = F.slice(arr, i + F.lit(2), F.size(arr) - i - F.lit(1))
+        if keep is not None:
+            rest = F.filter(rest, lambda y: keep(x, y))
+        return F.transform(rest, lambda y: emit(x, y))
+
+    return F.flatten(F.transform(arr, row))
+
+
+def _posting_pairs(
+    exploded: DataFrame, key: str, member, max_df: int | None, emit, keep=None
+) -> DataFrame:
+    """The inverted-index pair fan: ONE shuffle groups ``exploded`` on
+    ``key`` into sorted posting lists of ``member``, lists with fewer
+    than 2 members (or more than ``max_df``, the hot-key skew cap, when
+    set) are dropped, and the upper triangle of each list is exploded
+    into one ``__p`` row per ``emit(x, y)`` pair — no self-join (a
+    sort-merge self-join on hot keys re-shuffles the full posting set
+    twice and explodes inside the join instead of here).
+
+    explode_outer + isNotNull on the GENERATED column: plain explode
+    triggers InferFiltersFromGenerate, which clones the whole pair
+    expression into a pushed-down per-row filter."""
+    posts = exploded.groupBy(key).agg(
+        F.array_sort(F.collect_list(member)).alias("__docs")
+    )
+    posts = posts.where(F.size("__docs") >= 2)
+    if max_df is not None:
+        posts = posts.where(F.size("__docs") <= max_df)
+    pairs = _upper_triangle(F.col("__docs"), emit, keep)
+    return posts.select(F.explode_outer(pairs).alias("__p")).where(
+        F.col("__p").isNotNull()
+    )
+
+
+def _shingle_overlap(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    max_shingle_freq: int | None,
+    keep=None,
+) -> DataFrame:
+    """``(id_a, id_b, __shared, __na, __nb)`` for every doc pair sharing
+    at least one n-gram shingle (id_a < id_b): shared shingle count and
+    both shingle-set sizes — the core both the Jaccard and containment
+    scores are computed from. ``keep(x, y)`` prunes pairs of
+    ``(__id, __n)`` structs before they are emitted."""
+    sh = _shingle_frame(df, id_col, text_col, n).withColumn("__n", F.size("__sh"))
+    exploded = sh.select("__id", "__n", F.explode_outer("__sh").alias("__s")).where(
+        F.col("__s").isNotNull()
+    )
+    pairs = _posting_pairs(
+        exploded,
+        "__s",
+        F.struct("__id", "__n"),
+        max_shingle_freq,
+        lambda x, y: F.struct(x.alias("a"), y.alias("b")),
+        keep,
+    )
+    # group on ONE packed 64-bit pair key, not (id_a, id_b, na, nb):
+    # the shuffle compares 8-byte longs instead of two id strings; ids
+    # and sizes ride along as any_value (functionally dependent on the
+    # pair). Collision odds over pair count are the same negligible
+    # d²/2⁶⁵ already accepted for shingle hashes.
+    return pairs.groupBy(F.xxhash64("__p.a.__id", "__p.b.__id").alias("__k")).agg(
+        F.count(F.lit(1)).alias("__shared"),
+        F.any_value("__p.a.__id").alias("id_a"),
+        F.any_value("__p.b.__id").alias("id_b"),
+        F.any_value("__p.a.__n").alias("__na"),
+        F.any_value("__p.b.__n").alias("__nb"),
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -528,85 +627,29 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_shingle_freq: int | None = 1000,
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs via shingle-blocked self-join.
+    """Exact n-gram Jaccard near-dup pairs via a shingle inverted index.
 
-    explode(shingles) → self-equi-join on shingle → count shared per
-    pair; |union| = |A|+|B|−shared. Only pairs sharing ≥1 shingle are
-    ever materialized. ``max_shingle_freq`` drops shingles appearing in
-    more than that many docs (hot-shingle skew cap: a stop-shingle in
-    10⁶ docs would otherwise emit 10¹² join rows).
+    Hashed shingles → one groupBy on the shingle key → the upper
+    triangle of each posting list generated map-side → count shared
+    per pair; |union| = |A|+|B|−shared. Only pairs sharing ≥1 shingle
+    are ever materialized. ``max_shingle_freq`` drops shingles
+    appearing in more than that many docs (hot-shingle skew cap: a
+    stop-shingle in 10⁶ docs would otherwise emit 10¹² pairs).
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
-    # shingle keys stay 64-bit hashes end-to-end: hash each token once,
-    # combine n token hashes per gram position with one xxhash64 over
-    # longs — no intermediate concat_ws string is ever built, and the
-    # grouping key shuffles as an 8-byte long. The hash is INTERNAL
-    # (pair membership only), so it needs no DuckDB twin; collision
-    # odds ~d²/2⁶⁵ are negligible at any corpus size. Each array is
-    # projected before the next HOF consumes it (lambda subtrees
-    # re-evaluate per element — see hashed_shingles_of_hashes PERF note)
-    sh = (
-        df.select(F.col(id_col).alias("__id"), word_tokens(text_col).alias("__toks"))
-        .select(
-            "__id",
-            F.transform("__toks", lambda t: F.xxhash64(t)).alias("__th"),
-        )
-        .select("__id", hashed_shingles_of_hashes(F.col("__th"), n).alias("__sh"))
-        .withColumn("__n", F.size("__sh"))
-    )
-    # explode_outer + isNotNull on the GENERATED column: plain explode
-    # triggers InferFiltersFromGenerate, which clones the whole shingle
-    # expression (tokenizer inlined, re-evaluated per element) into a
-    # pushed-down per-row filter — catastrophic on the hot path
-    exploded = (
-        sh.select("__id", "__n", F.explode_outer("__sh").alias("__s"))
-        .where(F.col("__s").isNotNull())
-    )
-    # inverted index: one shuffle on the shingle key, then the upper
-    # triangle of each posting list is generated map-side — no self-join
-    # (a sort-merge self-join on hot shingles re-shuffles the full
-    # posting set twice and explodes inside the join instead of here)
-    grouped = exploded.groupBy("__s").agg(
-        F.array_sort(F.collect_list(F.struct("__id", "__n"))).alias("__docs")
-    )
-    grouped = grouped.where(F.size("__docs") >= 2)
-    if max_shingle_freq is not None:
-        grouped = grouped.where(F.size("__docs") <= max_shingle_freq)
-    docs = F.col("__docs")
     # length filter (exact, from the set-similarity-join literature):
     # J(A,B) >= t forces t*max(|A|,|B|) <= min(|A|,|B|) — prune inside
     # the pair transform, BEFORE the pair ever hits the shuffle. Prunes
     # quadratically on corpora with varied doc lengths.
-    pair_structs = F.flatten(
-        F.transform(
-            docs,
-            lambda x, i: F.transform(
-                F.filter(
-                    F.slice(docs, i + F.lit(2), F.size(docs) - i - F.lit(1)),
-                    lambda y: F.least(x["__n"], y["__n"])
-                    >= threshold * F.greatest(x["__n"], y["__n"]),
-                ),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    # group on ONE packed 64-bit pair key, not (id_a, id_b, na, nb):
-    # the shuffle compares 8-byte longs instead of two id strings; ids
-    # and sizes ride along as any_value (functionally dependent on the
-    # pair). Collision odds over pair count are the same negligible
-    # d²/2⁶⁵ already accepted for shingle hashes.
-    shared = (
-        grouped.select(F.explode_outer(pair_structs).alias("__p"))
-        .where(F.col("__p").isNotNull())
-        .groupBy(F.xxhash64("__p.a.__id", "__p.b.__id").alias("__k"))
-        .agg(
-            F.count(F.lit(1)).alias("__shared"),
-            F.any_value("__p.a.__id").alias("id_a"),
-            F.any_value("__p.b.__id").alias("id_b"),
-            F.any_value("__p.a.__n").alias("__na"),
-            F.any_value("__p.b.__n").alias("__nb"),
-        )
+    shared = _shingle_overlap(
+        df,
+        id_col,
+        text_col,
+        n,
+        max_shingle_freq,
+        keep=lambda x, y: F.least(x["__n"], y["__n"])
+        >= threshold * F.greatest(x["__n"], y["__n"]),
     )
     jac = F.col("__shared") / (F.col("__na") + F.col("__nb") - F.col("__shared"))
     return (
@@ -641,47 +684,7 @@ def ngram_containment_pairs(
     Returns (id_a, id_b, containment) with id_a < id_b,
     containment >= threshold.
     """
-    sh = (
-        df.select(F.col(id_col).alias("__id"), word_tokens(text_col).alias("__toks"))
-        .select(
-            "__id",
-            F.transform("__toks", lambda t: F.xxhash64(t)).alias("__th"),
-        )
-        .select("__id", hashed_shingles_of_hashes(F.col("__th"), n).alias("__sh"))
-        .withColumn("__n", F.size("__sh"))
-    )
-    exploded = (
-        sh.select("__id", "__n", F.explode_outer("__sh").alias("__s"))
-        .where(F.col("__s").isNotNull())
-    )
-    grouped = exploded.groupBy("__s").agg(
-        F.array_sort(F.collect_list(F.struct("__id", "__n"))).alias("__docs")
-    )
-    grouped = grouped.where(F.size("__docs") >= 2)
-    if max_shingle_freq is not None:
-        grouped = grouped.where(F.size("__docs") <= max_shingle_freq)
-    docs = F.col("__docs")
-    pair_structs = F.flatten(
-        F.transform(
-            docs,
-            lambda x, i: F.transform(
-                F.slice(docs, i + F.lit(2), F.size(docs) - i - F.lit(1)),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    shared = (
-        grouped.select(F.explode_outer(pair_structs).alias("__p"))
-        .where(F.col("__p").isNotNull())
-        .groupBy(F.xxhash64("__p.a.__id", "__p.b.__id").alias("__k"))
-        .agg(
-            F.count(F.lit(1)).alias("__shared"),
-            F.any_value("__p.a.__id").alias("id_a"),
-            F.any_value("__p.b.__id").alias("id_b"),
-            F.any_value("__p.a.__n").alias("__na"),
-            F.any_value("__p.b.__n").alias("__nb"),
-        )
-    )
+    shared = _shingle_overlap(df, id_col, text_col, n, max_shingle_freq)
     cont = F.col("__shared") / F.least("__na", "__nb")
     return (
         shared.withColumn("containment", cont)
@@ -1442,21 +1445,13 @@ def _bucket_pair_arr():
     """All in-bucket candidate pairs of a ``__ms`` member list, as one
     array of (id_a, id_b, hamming) structs — generated behind the
     explode barrier so only hamming-filtered pairs reach any shuffle."""
-    ms = F.col("__ms")
-    return F.flatten(
-        F.transform(
-            ms,
-            lambda x, i: F.transform(
-                F.slice(ms, i + 2, F.greatest(F.size(ms) - i - 1, F.lit(0))),
-                lambda y: F.struct(
-                    x["__id"].alias("id_a"),
-                    y["__id"].alias("id_b"),
-                    F.bit_count(x["simhash"].bitwiseXOR(y["simhash"]))
-                    .cast("int")
-                    .alias("hamming"),
-                ),
-            ),
-        )
+    return _upper_triangle(
+        F.col("__ms"),
+        lambda x, y: F.struct(
+            x["__id"].alias("id_a"),
+            y["__id"].alias("id_b"),
+            F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])).cast("int").alias("hamming"),
+        ),
     )
 
 
@@ -1786,11 +1781,7 @@ def prefix_filter_jaccard_pairs(
 
     Returns (id_a, id_b, jaccard), id_a < id_b, jaccard >= threshold.
     """
-    sh = (
-        df.select(F.col(id_col).alias("__id"), word_tokens(text_col).alias("__toks"))
-        .select("__id", F.transform("__toks", lambda t: F.xxhash64(t)).alias("__th"))
-        .select("__id", hashed_shingles_of_hashes(F.col("__th"), n).alias("__sh"))
-    )
+    sh = _shingle_frame(df, id_col, text_col, n)
     # the exploded frame feeds BOTH the df count and the ordered
     # re-collect; lazy-checkpoint so the tokenizer runs once. The
     # size/non-empty filter goes AFTER the checkpoint barrier: a
@@ -1832,31 +1823,19 @@ def prefix_filter_jaccard_pairs(
             F.transform(F.slice("__os", 1, p), lambda s: s["__s"])
         ).alias("__s"),
     )
-    grouped = (
-        prefix.groupBy("__s")
-        .agg(F.array_sort(F.collect_list(F.struct("__id", "__n"))).alias("__docs"))
-        .where(F.size("__docs") >= 2)
-    )
-    docs = F.col("__docs")
     # length filter with an epsilon so t·max float jitter cannot drop a
     # boundary pair (e.g. |A|=9, |B|=45, t=0.2: 0.2*45 → 9.0000000002);
     # this is only a prune — the exact jaccard filter below decides
-    pair_structs = F.flatten(
-        F.transform(
-            docs,
-            lambda x, i: F.transform(
-                F.filter(
-                    F.slice(docs, i + F.lit(2), F.size(docs) - i - F.lit(1)),
-                    lambda y: F.least(x["__n"], y["__n"])
-                    >= threshold * F.greatest(x["__n"], y["__n"]) - 1e-9,
-                ),
-                lambda y: F.struct(x["__id"].alias("id_a"), y["__id"].alias("id_b")),
-            ),
-        )
-    )
     cand = (
-        grouped.select(F.explode_outer(pair_structs).alias("__p"))
-        .where(F.col("__p").isNotNull())
+        _posting_pairs(
+            prefix,
+            "__s",
+            F.struct("__id", "__n"),
+            None,
+            lambda x, y: F.struct(x["__id"].alias("id_a"), y["__id"].alias("id_b")),
+            keep=lambda x, y: F.least(x["__n"], y["__n"])
+            >= threshold * F.greatest(x["__n"], y["__n"]) - 1e-9,
+        )
         .select("__p.id_a", "__p.id_b")
         .distinct()
     )
@@ -1904,12 +1883,7 @@ def duplicate_ngram_coverage(
     Returns (id, n_grams, dup_grams, dup_coverage) for every input
     row; documents too short for a single n-gram get coverage 0.0.
     """
-    sh = (
-        df.select(F.col(id_col).alias("__id"), word_tokens(text_col).alias("__toks"))
-        .select("__id", F.transform("__toks", lambda t: F.xxhash64(t)).alias("__th"))
-        .select("__id", hashed_shingles_of_hashes(F.col("__th"), n).alias("__sh"))
-    )
-    sh = sh.localCheckpoint(eager=False)
+    sh = _shingle_frame(df, id_col, text_col, n).localCheckpoint(eager=False)
     ex = sh.select("__id", F.explode_outer("__sh").alias("__s")).where(
         F.col("__s").isNotNull()
     )
@@ -2667,26 +2641,14 @@ def winnowing_near_dup_pairs(
     """
     fps = winnowing_fingerprints(df, id_col, text_col, k=k, w=w)
     fd = fps.select(F.col(id_col).alias("__fid"), "fp_hash").distinct()
-    posts = (
-        fd.groupBy("fp_hash")
-        .agg(F.sort_array(F.collect_list("__fid")).alias("__ds"))
-        .where(
-            (F.size("__ds") >= 2) & (F.size("__ds") <= max_fp_doc_freq)
-        )
-    )
-    ds = F.col("__ds")
-    pair_structs = F.flatten(
-        F.transform(
-            ds,
-            lambda x, i: F.transform(
-                F.slice(ds, i + F.lit(2), F.size(ds) - i - F.lit(1)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
-    )
     return (
-        posts.select(F.explode_outer(pair_structs).alias("__p"))
-        .where(F.col("__p").isNotNull())
+        _posting_pairs(
+            fd,
+            "fp_hash",
+            "__fid",
+            max_fp_doc_freq,
+            lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")),
+        )
         .select("__p.id_a", "__p.id_b")
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("long").alias("shared_fps"))

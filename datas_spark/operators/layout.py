@@ -154,7 +154,8 @@ def zone_skipping_report(
     predicate column's zone range is disjoint from its [lo, hi] — the
     exact rule parquet row-group pruning applies — and
     ``n_rows_matching`` (layout-invariant) anchors the skip ratio
-    against the predicate's true selectivity.
+    against the predicate's true selectivity. An empty ``layouts``
+    raises ``ValueError`` (there is nothing to compare).
 
     This is the design tool for the 100 TB decision "sort by one
     column or Z-order by two": run it on a sample, compare
@@ -168,6 +169,8 @@ def zone_skipping_report(
     through one exchange and one groupBy, halving jobs/exchanges on
     both what-if queries with identical summary rows.
     """
+    if not layouts:
+        raise ValueError("zone_skipping_report needs at least one layout")
     cols = list(predicates)
     match = F.lit(True)
     for c, (lo, hi) in predicates.items():

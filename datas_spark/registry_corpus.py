@@ -407,6 +407,7 @@ from pyspark.sql import functions as F
 
 from datas_spark.functions.text import word_tokens
 from datas_spark.io.sources import read_table
+from datas_spark.operators import dedup as D
 from datas_spark.registry_core import register
 
 _GRAM_SQL = r"""
@@ -506,22 +507,11 @@ def q_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     sizes = v.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("__n"))
-    per_token = v.groupBy("__t").agg(
-        F.array_sort(F.collect_set("source")).alias("__ss")
-    )
-    srcs = F.col("__ss")
-    pairs = F.flatten(
-        F.transform(
-            srcs,
-            lambda x, i: F.transform(
-                F.slice(srcs, i + F.lit(2), F.size(srcs) - i - F.lit(1)),
-                lambda y: F.struct(x.alias("src_a"), y.alias("src_b")),
-            ),
-        )
-    )
+    # v is distinct per (source, token): each posting list is a set
     shared = (
-        per_token.where(F.size("__ss") >= 2)
-        .select(F.explode(pairs).alias("__p"))
+        D._posting_pairs(
+            v, "__t", "source", None, lambda x, y: F.struct(x.alias("src_a"), y.alias("src_b"))
+        )
         .groupBy(F.col("__p.src_a").alias("src_a"), F.col("__p.src_b").alias("src_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("shared"))
     )

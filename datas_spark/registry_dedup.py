@@ -938,7 +938,6 @@ pooling per label.
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datas_spark.functions.text import hashed_shingles_of_hashes, word_tokens
 from datas_spark.io.sources import read_table
 from datas_spark.operators import dedup as D
 from datas_spark.registry_taskvector import _lsh_pairs_oracle
@@ -984,17 +983,12 @@ def q_minhash_accuracy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = read_table(spark, sf_dir, "documents")
     est = ART.pairs_artifact(spark, sf_dir, "minhash")
-    sh = (
-        docs.select(F.col("doc_id").alias("__id"), word_tokens("text").alias("__toks"))
-        .select("__id", F.transform("__toks", lambda t: F.xxhash64(t)).alias("__th"))
-        .select("__id", hashed_shingles_of_hashes(F.col("__th"), 3).alias("__g"))
-        .withColumn("__n", F.size("__g"))
-    )
+    sh = D._shingle_frame(docs, "doc_id", "text", 3).withColumn("__n", F.size("__sh"))
     a = sh.select(
-        F.col("__id").alias("id_a"), F.col("__g").alias("__ga"), F.col("__n").alias("__na")
+        F.col("__id").alias("id_a"), F.col("__sh").alias("__ga"), F.col("__n").alias("__na")
     )
     b = sh.select(
-        F.col("__id").alias("id_b"), F.col("__g").alias("__gb"), F.col("__n").alias("__nb")
+        F.col("__id").alias("id_b"), F.col("__sh").alias("__gb"), F.col("__n").alias("__nb")
     )
     inter = F.size(F.array_intersect("__ga", "__gb"))
     exact = inter / (F.col("__na") + F.col("__nb") - inter).cast("double")

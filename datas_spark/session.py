@@ -56,8 +56,10 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # Deterministic timestamp semantics for oracle comparison.
         .config("spark.sql.session.timeZone", "UTC")
-        # Quieter driver-side logs for bench runs.
+        # Quieter driver-side logs for bench runs; no console progress
+        # bars, so a run's stdout tail is its result line.
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         # local[N] runs the whole engine in ONE JVM: the 1g default heap
         # starves 32 executor threads + localCheckpoint blocks across a
         # 100+-query bench session (observed: GCLocker allocation

@@ -6,7 +6,8 @@ Pass criterion (VERDICT round-4 #4): at 10x the data, no query may
 exceed ``10x its sf0.1 time + 0.3 s`` — linear-or-better scaling, with
 the same additive slack as ``bench_diff.py`` so a 30 ms query jittering
 to 0.4 s is noise, not a finding. Superlinear queries are listed
-loudly. Results land in ``SF1_SCALING.md``.
+loudly. Every run appends a dated section to ``SF1_SCALING.md`` —
+scale evidence is never overwritten.
 
 Usage::
 
@@ -32,6 +33,7 @@ timings ~2x).
 from __future__ import annotations
 
 import argparse
+import datetime
 import json
 import os
 import statistics
@@ -56,10 +58,8 @@ def main() -> None:
         "--queries", default=None,
         help="comma-separated query names (overrides --top selection; "
              "names need not have committed floors yet — pair with "
-             "--same-session). With --append, rows append to "
-             "SF1_SCALING.md as a dated section instead of rewriting it.",
+             "--same-session).",
     )
-    ap.add_argument("--append", action="store_true")
     args = ap.parse_args()
     sf1_dir = args.sf1_dir
     if sf1_dir is None:
@@ -136,16 +136,14 @@ def main() -> None:
         if args.same_session
         else "sf0.1 baselines from the committed BENCH_DETAIL.json floors"
     )
+    today = datetime.date.today().isoformat()
     lines = [
-        "# SF1 scaling run",
+        "",
+        f"## {today}: {scope}",
         "",
         f"Synthesized sf1 (10x sf0.1, `scripts/gen_sf1.py`) at `{sf1_dir}`;",
-        f"{scope}, median of "
-        f"{args.runs} timed runs after warmup, local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]; "
-        f"{mode}.",
-        "",
-        "Pass criterion: at 10x data, no query exceeds 10x its sf0.1 time",
-        "+ 0.3 s (additive slack mutes timer noise on sub-100 ms queries).",
+        f"median of {args.runs} timed runs after warmup, "
+        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]; {mode}.",
         "",
         "| query | sf0.1 (s) | sf1 (s) | ratio |",
         "|---|---|---|---|",
@@ -168,22 +166,16 @@ def main() -> None:
         "",
     ]
     out = os.path.join(REPO, "SF1_SCALING.md")
-    if args.append:
-        import datetime as _dt
-
-        today = _dt.date.today().isoformat()
-        block = [
+    if not os.path.exists(out):
+        lines = [
+            "# SF1 scaling runs",
             "",
-            f"## Targeted addendum ({today}, {scope}; {mode})",
-            "",
-        ] + lines[8:]
-        with open(out, "a") as f:
-            f.write("\n".join(block))
-        print(f"appended {len(names)} rows to {out}")
-    else:
-        with open(out, "w") as f:
-            f.write("\n".join(lines))
-        print(f"wrote {out}")
+            "Pass criterion: at 10x data, no query exceeds 10x its sf0.1 time",
+            "+ 0.3 s (additive slack mutes timer noise on sub-100 ms queries).",
+        ] + lines
+    with open(out, "a") as f:
+        f.write("\n".join(lines))
+    print(f"appended {len(names)} rows to {out}")
     if worst:
         sys.exit(1)
 

@@ -1309,3 +1309,60 @@ def test_minhash_lsh_plan_theory_and_measurement(spark):
         minhash_lsh_plan(df, "doc_id", "text", target_threshold=1.5)
     with _pytest.raises(ValueError):
         minhash_lsh_plan(df, "doc_id", "text", grid=50)  # not a power of 2
+
+
+# posting-list edge cases for every operator built on the inverted-index
+# pair fan: (value type, three values sharing no posting key, runner)
+_DISJOINT_TEXTS = ["red green blue", "cyan magenta yellow", "one two three"]
+_POSTING_OPS = {
+    "jaccard": (
+        "string",
+        _DISJOINT_TEXTS,
+        lambda df, cap: D.ngram_jaccard_pairs(
+            df, "id", "v", n=3, threshold=0.5, max_shingle_freq=cap
+        ),
+    ),
+    "containment": (
+        "string",
+        _DISJOINT_TEXTS,
+        lambda df, cap: D.ngram_containment_pairs(
+            df, "id", "v", n=3, threshold=0.5, max_shingle_freq=cap
+        ),
+    ),
+    "winnowing": (
+        "string",
+        _DISJOINT_TEXTS,
+        lambda df, cap: D.winnowing_near_dup_pairs(
+            df, "id", "v", k=2, w=2, min_shared=1, max_fp_doc_freq=cap
+        ),
+    ),
+    # 8-bit signatures in two 4-bit bands; 0x00/0x11/0x22 share no band
+    "hamming": (
+        "long",
+        [0x00, 0x11, 0x22],
+        lambda df, cap: D.hamming_near_dup_pairs(
+            df, "id", "v", bits=8, bands=2, max_hamming=1, max_bucket_size=cap
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", ["cap_kept", "cap_dropped", "singletons", "empty", "all_null"])
+@pytest.mark.parametrize("op", sorted(_POSTING_OPS))
+def test_posting_list_edges(spark, op, case):
+    """A posting list with exactly the cap's members is kept and one
+    member more drops it; singleton lists, an empty input and all-NULL
+    values emit no pairs."""
+    vtype, distinct, run = _POSTING_OPS[op]
+    cap = 3
+    values = {
+        "cap_kept": [distinct[0]] * cap,
+        "cap_dropped": [distinct[0]] * (cap + 1),
+        "singletons": distinct,
+        "empty": [],
+        "all_null": [None] * cap,
+    }[case]
+    df = spark.createDataFrame(list(enumerate(values)), f"id long, v {vtype}")
+    got = {(r.id_a, r.id_b) for r in run(df, cap).collect()}
+    want = {(0, 1), (0, 2), (1, 2)} if case == "cap_kept" else set()
+    assert got == want

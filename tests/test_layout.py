@@ -146,6 +146,12 @@ def test_zone_skipping_report_hand_example(spark):
         assert r["n_rows_matching"] == 2
 
 
+def test_zone_skipping_report_rejects_empty_layouts(spark):
+    df = spark.createDataFrame([(0, 1)], "rid long, x long")
+    with pytest.raises(ValueError, match="at least one layout"):
+        LAY.zone_skipping_report(df, layouts={}, zone_rows=2, predicates={"x": (1, 2)})
+
+
 def test_zone_minmax_covers_all_rows(spark):
     from datas_spark.operators.layout import zone_minmax
 

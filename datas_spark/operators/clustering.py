@@ -7,7 +7,12 @@ embedding stays a distributed ``array<float>`` column end-to-end:
 ``array_to_vector`` bridges into MLlib, KMeans fit streams over the
 data (executors aggregate, only k centroids come to the driver), and
 ``transform`` appends the cluster label as a column — no N×4096 driver
-materialization.
+materialization. The deterministic twin `kmeans_lloyd` keeps the same
+shape: per round one collected ≤ k·dim-row moment aggregate, with the k
+centroids held on the driver and inlined into the next round's
+map-only assignment as one literal (under AQE every action over a
+shuffled plan — a lazy checkpoint included — runs its stages anyway, so
+keeping the centroids in-plan saved no jobs).
 
 t-SNE (F4) has no distributed formulation; the reference uses it only
 for a scatter-plot png (main.py:360-376). We keep it driver-side,
@@ -105,27 +110,32 @@ def kmeans_lloyd(
       with the smallest INTEGER squared L2 distance (ties → smaller
       centroid index), then recompute each centroid as
       ``floor(Σq_i / n)`` per dimension via EXACT integer floor
-      division (``(s - pmod(s, n)) div n`` — the pmod subtraction
-      makes the numerator exactly divisible, so truncating ``div``
-      equals floor with no float rounding at any magnitude; empty
+      division (Python ``s // n`` on the collected long sums — no float
+      rounding at any magnitude; the DuckDB twin's
+      ``(s - ((s % n) + n) % n) // n`` is the same floor; empty
       clusters keep their previous centroid);
     - one final assignment pass against the round-``n_rounds``
       centroids.
 
-    Plan shape (scale contract): centroids live in ONE packed
-    broadcast row (k·dim longs) — assignment is a map-only fold per
-    point (``array_min`` over per-centroid integer distances), NEVER a
-    points×centroids shuffle; the update is one combinable
-    posexplode → (cluster, dim) aggregate (k·dim rows out) collected
-    straight into the next packed row (map-side merge, no join).
-    (The packed-row rebuild filters the flat k·dim moment list once per
-    (cluster, dim) slot — O((k·dim)²) work in ONE single-row task per
-    round, ADVICE r11: negligible at the k ≤ 64 / dim ≤ 64 caps this
-    engine enforces, but pre-group the moments per cluster before
-    raising either cap an order of magnitude.)
-    Per-round frames are lazily localCheckpoint-ed so lineage stays flat; there
-    are NO driver collects anywhere. At 10⁹ rows the per-round cost is
-    one scan + one k·dim-row aggregate, exactly KMeans' lower bound.
+    Plan shape (scale contract): the k centroids live on the DRIVER as
+    Python int lists — MLlib's own "only k centroids reach the driver"
+    shape. Assignment is a map-only fold per point (``array_min`` over
+    per-centroid integer distances against the centroids inlined as ONE
+    constant-folded array literal), NEVER a points×centroids shuffle;
+    each round's update is one combinable posexplode → (cluster, dim)
+    aggregate whose ≤ k·dim rows are collected, and the driver applies
+    ``s // n`` (Python floor division on exact ints — a NULL sum stays
+    NULL; a cluster with no moment rows keeps its previous centroid).
+    Why a collect per round instead of a lazy in-plan centroid row:
+    under AQE any action over a plan with exchanges — including the
+    lazy ``localCheckpoint`` a lazy round would need to keep lineage
+    flat — already runs every query stage, so a lazy round costs the
+    same jobs plus a broadcast cross join and a per-slot rebuild of the
+    centroid row. Per call: one seed collect (plus one count for
+    ``k="auto"``) and two jobs per round; the points frame is lazily
+    localCheckpoint-ed so rounds rescan it, not ``df``. At 10⁹ rows the
+    per-round cost is one scan + one k·dim-row aggregate, exactly
+    KMeans' lower bound.
 
     Σq per (cluster, dim) stays long-exact up to ~2^63/(|x|max·scale)
     rows per cluster (≈9e12 at the e6 default with unit-norm vectors —
@@ -133,6 +143,11 @@ def kmeans_lloyd(
     the long sum); past that, widen the moment sums to decimal(38,0)
     (the `cluster_cohesion` discipline) — the DuckDB twin's HUGEINT sum
     is already 128-bit.
+
+    NULL handling: a NULL vector has a NULL distance to every centroid,
+    so it takes cluster 0 and adds no moments; a NULL component counts
+    in the (cluster, dim) row count but not in its sum; a centroid
+    seeded from a NULL vector stays NULL.
 
     ``carry_cols`` (round 11, guide §8): extra ``df`` columns carried
     THROUGH the final map-only assignment pass, so a consumer that
@@ -147,19 +162,14 @@ def kmeans_lloyd(
     int, centroid array<double>)`` with components ``c/scale`` — the
     quantizer frame `ivf_topk_fixed` consumes as learned cells.
     """
-    from pyspark.sql.functions import broadcast
+    import math
 
     auto_k = isinstance(k, str)
     if auto_k:
         # k="auto" (VERDICT r10 #3): grow k with the corpus —
-        # ``clamp(ceil(sqrt(N / auto_target)), auto_min_k, auto_max_k)``
-        # computed INSIDE the plan (the `_auto_cap_expr` discipline: a
-        # lazy 1-row count crossJoined broadcast, no call-time action).
-        # The seed pool takes the top auto_max_k rows (distributed
-        # top-k) and a dynamic array slice keeps the first k — no
-        # partition-less window, no driver collect. ceil(sqrt(·)) can
-        # only flip cross-engine at perfect squares, where sqrt is
-        # exact on both.
+        # ``clamp(ceil(sqrt(N / auto_target)), auto_min_k, auto_max_k)``.
+        # ceil(sqrt(·)) can only flip cross-engine at perfect squares,
+        # where sqrt is exact on both.
         if k != "auto":
             raise ValueError(f"k must be an int >= 1 or 'auto', got {k!r}")
         if not 1 <= auto_min_k <= auto_max_k or auto_target < 1:
@@ -175,7 +185,7 @@ def kmeans_lloyd(
     # reserve every internal name AND the output column (ADVICE r11): a
     # carry column named 'cluster' (or an internal temp) would silently
     # produce a duplicate/ambiguous output column downstream
-    bad = {"__id", "__q", "__h", "__cents", "__cluster", "cluster"} & set(carry)
+    bad = {"__id", "__q", "__cluster", "cluster"} & set(carry)
     if bad:
         raise ValueError(f"carry_cols collide with reserved names: {sorted(bad)}")
     if id_col in carry:
@@ -185,144 +195,85 @@ def kmeans_lloyd(
         _quantized(vec_col, scale).alias("__q"),
         *[F.col(c) for c in carry],
     ).localCheckpoint(eager=False)
+    if auto_k:
+        n = pts.count()
+        k = max(auto_min_k, min(auto_max_k, math.ceil(math.sqrt(n / auto_target))))
+    # init: the k smallest (md5(id), id); q only orders duplicate ids
     seeds = (
         pts.select(F.md5(F.col("__id").cast("string")).alias("__h"), "__id", "__q")
-        .orderBy(F.col("__h").asc(), F.col("__id").asc())
-        .limit(auto_max_k if auto_k else k)
+        .orderBy("__h", "__id", "__q")
+        .limit(k)
+        .collect()
     )
-    packed = seeds.agg(
-        F.array_sort(F.collect_list(F.struct("__h", "__id", "__q"))).alias(
-            "__raw"
-        )
-    )
-    if auto_k:
-        n1 = pts.agg(F.count(F.lit(1)).cast("long").alias("__nn"))
-        k_expr = F.greatest(
-            F.lit(auto_min_k).cast("long"),
-            F.least(
-                F.lit(auto_max_k).cast("long"),
-                F.ceil(
-                    F.sqrt(
-                        F.col("__nn").cast("double") / F.lit(float(auto_target))
-                    )
-                ),
-            ),
-        ).cast("int")
-        packed = packed.crossJoin(broadcast(n1)).select(
-            F.slice("__raw", F.lit(1), k_expr).alias("__raw")
-        )
-    packed = (
-        packed.select(
-            F.transform(
-                F.col("__raw"),
-                lambda s, i: F.struct(i.cast("int").alias("j"), s["__q"].alias("c")),
-            ).alias("__cents")
-        )
-        .localCheckpoint(eager=False)
-    )
+    cents = [r["__q"] for r in seeds]
 
-    def _assign(cents_frame: DataFrame, extra: tuple = ()) -> DataFrame:
-        def d2(cvec):
-            return F.aggregate(
-                F.zip_with(F.col("__q"), cvec, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            )
-
-        best = F.array_min(
-            F.transform(
-                F.col("__cents"),
-                lambda s: F.struct(d2(s["c"]).alias("d"), s["j"].alias("j")),
-            )
+    def _assign(extra: tuple = ()) -> DataFrame:
+        # ties → smaller index: the (d, j) struct minimum; a NULL
+        # distance (NULL vector / component, ragged width) sorts first
+        best = F.expr(
+            f"array_min(transform({_centroid_literal(cents)}, s -> named_struct("
+            "'d', aggregate(zip_with(__q, s.c, (a, b) -> (a - b) * (a - b)),"
+            " 0L, (acc, v) -> acc + v), 'j', s.j)))"
         )
-        return pts.crossJoin(broadcast(cents_frame)).select(
-            "__id", "__q", *extra, best["j"].alias("__cluster")
-        )
+        return pts.select("__id", "__q", *extra, best["j"].alias("__cluster"))
 
     for _ in range(n_rounds):
-        assigned = _assign(packed)
-        # round-11 update stage (guide §2.4 "remove shuffles outright"):
-        # the per-(cluster, dim) moment aggregate collects STRAIGHT into
-        # one flat (cluster, d, c) row and merges into the packed
-        # centroid row with a map-side transform — versus the previous
-        # groupBy(cluster) re-aggregate + merge join + re-pack aggregate
-        # (one exchange and one join fewer per round; measured 2.1→1.5 s
-        # on the k=8/2-round shape, byte-identical centroids). A wide
-        # per-dimension-column aggregate was ALSO tried and REVERTED: at
-        # dim=64 its codegen cost per round loses to the narrow
-        # posexplode aggregate (4.3 s vs 2.2 s on the 4-round shape).
-        flat = (
-            assigned.select("__cluster", F.posexplode("__q").alias("__d", "__x"))
+        # narrow (cluster, d) moments: a wide per-dimension-column
+        # aggregate measured 2x slower at dim=64 (codegen cost per round)
+        rows = (
+            _assign()
+            .select("__cluster", F.posexplode("__q").alias("__d", "__x"))
             .groupBy("__cluster", "__d")
             .agg(
                 F.sum("__x").alias("__s"),
                 F.count(F.lit(1)).cast("long").alias("__n"),
             )
-            .select(
-                "__cluster",
-                "__d",
-                # exact integer floor division: subtracting pmod makes the
-                # numerator exactly divisible, so `div` (truncating) equals
-                # floor — no float rounding anywhere (DuckDB twin uses
-                # (s - ((s%n)+n)%n) // n, verified bit-identical)
-                F.expr("(__s - pmod(__s, __n)) div __n").alias("__c"),
-            )
+            .collect()
         )
-        newrow = flat.agg(
-            F.collect_list(F.struct("__cluster", "__d", "__c")).alias("__new")
-        )
-        packed = (
-            packed.crossJoin(broadcast(newrow))
-            .select(
-                F.transform(
-                    "__cents",
-                    lambda p: F.struct(
-                        p["j"].alias("j"),
-                        F.coalesce(
-                            # nonempty cluster: rebuild its dim-ordered
-                            # vector from the flat moment list; empty
-                            # cluster (no rows in __new): keep previous
-                            F.when(
-                                F.exists(
-                                    "__new",
-                                    lambda x: x["__cluster"] == p["j"],
-                                ),
-                                F.transform(
-                                    F.sequence(
-                                        F.lit(0), F.size(p["c"]) - F.lit(1)
-                                    ),
-                                    lambda d: F.get(
-                                        F.filter(
-                                            "__new",
-                                            lambda x2: (
-                                                x2["__cluster"] == p["j"]
-                                            )
-                                            & (x2["__d"] == d),
-                                        ),
-                                        0,
-                                    )["__c"],
-                                ),
-                            ),
-                            p["c"],
-                        ).alias("c"),
-                    ),
-                ).alias("__cents")
-            )
-            .localCheckpoint(eager=False)
-        )
+        # exact floor mean per slot of the previous centroid's width (a
+        # NULL sum stays NULL); a cluster with no moment rows keeps its
+        # previous centroid
+        moments = {
+            (r["__cluster"], r["__d"]): None if r["__s"] is None else r["__s"] // r["__n"]
+            for r in rows
+        }
+        members = {j for j, _ in moments}
+        cents = [
+            [moments.get((j, d)) for d in range(len(c))]
+            if j in members and c is not None
+            else c
+            for j, c in enumerate(cents)
+        ]
 
-    final = _assign(packed, extra=tuple(carry)).select(
+    final = _assign(extra=tuple(carry)).select(
         F.col("__id").alias(id_col),
         *carry,
         F.col("__cluster").alias("cluster"),
     )
-    cents = packed.select(F.explode("__cents").alias("__pc")).select(
-        F.col("__pc")["j"].alias("cluster"),
-        F.transform(
-            F.col("__pc")["c"], lambda x: x.cast("double") / F.lit(float(scale))
-        ).alias("centroid"),
+    centroids = (
+        df.sparkSession.range(1)
+        .select(F.explode(F.expr(_centroid_literal(cents))).alias("__pc"))
+        .select(
+            F.col("__pc")["j"].alias("cluster"),
+            F.transform(
+                F.col("__pc")["c"], lambda x: x.cast("double") / F.lit(float(scale))
+            ).alias("centroid"),
+        )
     )
-    return final, cents
+    return final, centroids
+
+
+def _centroid_literal(cents: list) -> str:
+    """SQL literal ``array<struct<j int, c array<bigint>>>`` of driver-side
+    centroids (index j = list position); Spark constant-folds it."""
+
+    def arr(c):
+        if c is None:
+            return "NULL"
+        return "array(" + ", ".join("NULL" if x is None else f"{x}L" for x in c) + ")"
+
+    body = ", ".join(f"struct({j}, {arr(c)})" for j, c in enumerate(cents))
+    return f"CAST(array({body}) AS ARRAY<STRUCT<j: INT, c: ARRAY<BIGINT>>>)"
 
 
 def pca_reduce(df: DataFrame, vec_col: str, k: int = 10, out_col: str = "pca") -> DataFrame:
@@ -663,7 +614,12 @@ def random_projection(
     # composed pipelines (VERDICT r10 #8 — each probe is a separate
     # Spark job at plan-construction time), else probe one row for it
     if dim is None:
-        first = df.select(F.size(F.col(vec_col)).alias("n")).limit(1).collect()
+        first = (
+            df.where(F.col(vec_col).isNotNull())
+            .select(F.size(F.col(vec_col)).alias("n"))
+            .limit(1)
+            .collect()
+        )
         if not first:
             raise ValueError("empty frame: cannot infer vector width")
         dim = int(first[0].n)
@@ -797,7 +753,12 @@ def pca_exact_components(
     if k < 1 or n_iters < 1:
         raise ValueError(f"need k >= 1 and n_iters >= 1, got {k}/{n_iters}")
     if dim is None:
-        first = df.select(F.size(F.col(vec_col)).alias("n")).limit(1).collect()
+        first = (
+            df.where(F.col(vec_col).isNotNull())
+            .select(F.size(F.col(vec_col)).alias("n"))
+            .limit(1)
+            .collect()
+        )
         if not first:
             raise ValueError("empty frame: cannot infer vector width")
         dim = int(first[0].n)
@@ -845,14 +806,17 @@ def pca_exact_components(
             if isinstance(col, pa.ChunkedArray):
                 col = col.combine_chunks()
             lst = col
-            offs = np.asarray(lst.offsets)
-            widths = np.diff(offs)
+            # NULL vectors add no moments (and count nowhere); offsets
+            # and flatten() are slice-aware, `.values` is not
+            widths = np.diff(np.asarray(lst.offsets))[
+                np.asarray(lst.is_valid(), dtype=bool)
+            ]
             if len(widths) and not np.all(widths == d):
                 raise ValueError(
                     f"pca_exact_components: ragged vector width "
                     f"(expected {d}, saw {set(widths.tolist())})"
                 )
-            vals = np.asarray(lst.values, dtype=np.int64)
+            vals = np.asarray(lst.flatten(), dtype=np.int64)
             if vals.size == 0:
                 continue
             arr = vals.reshape(-1, d)

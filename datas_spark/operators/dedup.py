@@ -1928,8 +1928,9 @@ def k_core(
     graph-quality cut one notch simpler than triangle counting.
 
     Returns (node, degree) for the surviving core, degree measured in
-    the core. Each round is one combinable degree count + one semi
-    join per edge endpoint; frames ``localCheckpoint`` per round so
+    the core. Edges are undirected: (x, y) and (y, x) are one edge, and
+    self-loops are dropped. Each round is one combinable degree count +
+    one semi join per edge endpoint; frames ``localCheckpoint`` per round so
     lineage stays flat (the same discipline as
     ``connected_components``). Rounds are bounded by ``max_iter``
     (peeling strictly shrinks the node set, so it terminates;
@@ -1951,12 +1952,7 @@ def k_core(
         raise ValueError(f"k must be >= 1, got {k}")
     if batch_rounds < 1:
         raise ValueError(f"batch_rounds must be >= 1, got {batch_rounds}")
-    e = (
-        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected_edges(pairs, src, dst).localCheckpoint(eager=False)
     prev_n = e.count()
     rounds_left = max_iter
     while rounds_left > 0:
@@ -2023,7 +2019,8 @@ def k_core_blocked(
     fuzz-tested and oracle-checked.
 
     Returns ``(node, degree)`` for the surviving core — identical to
-    ``k_core`` on the same (block-disjoint) graph.
+    ``k_core`` on the same (block-disjoint) graph, with the same
+    undirected edge canonicalization.
     """
     import collections
 
@@ -2046,10 +2043,9 @@ def k_core_blocked(
                 "was violated — tighten the blocking key or raise the cap"
             )
         adj: dict = collections.defaultdict(set)
-        for a, b in zip(pdf["__a"], pdf["__b"]):
-            if a != b:
-                adj[a].add(b)
-                adj[b].add(a)
+        for a, b in zip(pdf["a"], pdf["b"]):
+            adj[a].add(b)
+            adj[b].add(a)
         stack = [n for n, nbrs in adj.items() if len(nbrs) < k]
         while stack:
             n = stack.pop()
@@ -2070,12 +2066,19 @@ def k_core_blocked(
             }
         )
 
-    sel = pairs.select(
-        F.col(src).alias("__a"),
-        F.col(dst).alias("__b"),
-        F.col(block_col).alias("__blk"),
-    )
+    sel = _undirected_edges(pairs, src, dst, F.col(block_col).alias("__blk"))
     return sel.groupBy("__blk").applyInPandas(_peel, out_schema)
+
+
+def _undirected_edges(pairs: DataFrame, src: str, dst: str, *extra) -> DataFrame:
+    """Distinct ``(a, b, *extra)`` with ``a < b``: (x, y) and (y, x) are
+    one undirected edge; self-loops and NULL endpoints are dropped."""
+    a, b = F.col(src), F.col(dst)
+    return (
+        pairs.where(a != b)
+        .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"), *extra)
+        .distinct()
+    )
 
 
 def merge_components(
@@ -2893,10 +2896,9 @@ def semdedup(
        trade; rows past the cap still appear in the output as
        singletons). A fixed k would otherwise make the pair stage
        quadratic across a data decade; ``k="auto"`` grows k with N
-       inside the plan (`kmeans_lloyd`'s lazy
-       ``clamp(ceil(sqrt(N/256)), 2, 64)`` — the `_auto_cap_expr`
-       discipline), and the cap bounds what bucketing leaves — all
-       three knobs compose at 100 TB;
+       (`kmeans_lloyd` counts the points once and takes
+       ``clamp(ceil(sqrt(N/256)), 2, 64)``), and the cap bounds what
+       bucketing leaves — all three knobs compose at 100 TB;
     3. duplicate groups = connected components over the pairs;
     4. keeper per group = the member with the LOWEST cosine to its
        cluster centroid (the paper's keep-the-least-typical rule —

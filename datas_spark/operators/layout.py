@@ -155,7 +155,10 @@ def zone_skipping_report(
     exact rule parquet row-group pruning applies — and
     ``n_rows_matching`` (layout-invariant) anchors the skip ratio
     against the predicate's true selectivity. An empty ``layouts``
-    raises ``ValueError`` (there is nothing to compare).
+    raises ``ValueError`` (there is nothing to compare), and so do
+    layout keys of different Spark types: the layouts are ranked as one
+    melted key column, so every key must resolve to ONE type (cast the
+    keys yourself — a silent widening could reorder a layout).
 
     This is the design tool for the 100 TB decision "sort by one
     column or Z-order by two": run it on a sample, compare
@@ -171,6 +174,13 @@ def zone_skipping_report(
     """
     if not layouts:
         raise ValueError("zone_skipping_report needs at least one layout")
+    by_type: dict[str, list[str]] = {}
+    for name, field in zip(layouts, df.select(*layouts.values()).schema.fields):
+        by_type.setdefault(field.dataType.simpleString(), []).append(name)
+    if len(by_type) > 1:
+        raise ValueError(
+            f"zone_skipping_report needs one layout key type, got {by_type}"
+        )
     cols = list(predicates)
     match = F.lit(True)
     for c, (lo, hi) in predicates.items():

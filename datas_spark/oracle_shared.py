@@ -229,7 +229,7 @@ def lloyd_cte_sql(
     )
     if isinstance(k, str):
         # k="auto": clamp(ceil(sqrt(n / target)), min_k, max_k) from the
-        # corpus count — mirrors kmeans_lloyd's lazy in-plan k exactly
+        # corpus count — mirrors kmeans_lloyd's k exactly
         c0 = f"""{p}_n AS (SELECT count(*)::BIGINT AS n FROM {p}_pts),
     {p}_c0 AS (
       SELECT j, c FROM (

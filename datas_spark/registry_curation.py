@@ -723,7 +723,7 @@ def q_curate_corpus_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation recipe with the SEMANTIC dedup stage (VERDICT r10
     #3): exact dedup, then SemDeDup over the survivors that have an
     embedding — auto-k Lloyd clusters (k = clamp(ceil(sqrt(N/256)),
-    2, 64) from a lazy in-plan count, so the SAME recipe config scales
+    2, 64) from one count of the points, so the SAME recipe config scales
     from sf0.001 to 100 TB without retuning), capped LSH-bucketed
     pairs at cosine >= 0.35, CC groups, least-centroid-typical
     keepers; docs without an embedding pass through. The stage CTE

@@ -158,6 +158,98 @@ def test_kmeans_lloyd_validates_params(spark):
         kmeans_lloyd(df, "id", "v", k=2, n_rounds=0)
 
 
+def _by_seed_rank(ids):
+    """Ids in kmeans_lloyd's seed order: ascending (md5(id), id)."""
+    import hashlib
+
+    return sorted(ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
+
+
+def _lloyd(spark, rows, k, n_rounds):
+    from datas_spark.operators.clustering import kmeans_lloyd
+
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    asg, cents = kmeans_lloyd(df, "id", "v", k=k, n_rounds=n_rounds)
+    return (
+        {r.id: r.cluster for r in asg.collect()},
+        {r.cluster: r.centroid for r in cents.collect()},
+    )
+
+
+def test_kmeans_lloyd_tie_goes_to_smaller_index(spark):
+    """A point equidistant from two centroids joins the smaller index;
+    the round-1 pick decides which side the update pulls it to, so the
+    final label exposes the tie rule."""
+    a, b, m = _by_seed_rank([1, 2, 3])  # a, b are the seeds; m is not
+    for va, vb in ((0.0, 0.2), (0.2, 0.0)):
+        labels, cents = _lloyd(
+            spark, [(a, [va]), (b, [vb]), (m, [0.1])], k=2, n_rounds=1
+        )
+        assert labels == {a: 0, b: 1, m: 0}
+        assert cents[0] == [round((va + 0.1) / 2, 6)]
+
+
+def test_kmeans_lloyd_null_vector_takes_cluster_zero_without_moments(spark):
+    """A NULL vector has a NULL distance to every centroid, so the
+    (d, j) minimum picks index 0; it contributes no moments, so the
+    centroids equal the run without that row."""
+    a, b, c, z = _by_seed_rank([11, 12, 13, 14])
+    rows = [(a, [0.4, 0.0]), (b, [-0.4, 0.0]), (c, [0.3, 0.1])]
+    base_labels, base_cents = _lloyd(spark, rows, k=2, n_rounds=2)
+    labels, cents = _lloyd(spark, rows + [(z, None)], k=2, n_rounds=2)
+    assert labels == {**base_labels, z: 0}
+    assert cents == base_cents
+
+
+def test_kmeans_lloyd_null_component_counts_in_n_not_in_s(spark):
+    """A NULL component adds to the (cluster, dim) row count but not to
+    its sum, so the floor mean is pulled toward zero."""
+    _, cents = _lloyd(
+        spark, [(1, [0.3, 0.4]), (2, [None, 0.2])], k=1, n_rounds=1
+    )
+    assert cents == {0: [0.15, 0.3]}  # d0: 300000 // 2, d1: 600000 // 2
+
+
+def test_kmeans_lloyd_k_above_row_count(spark):
+    rows = [(1, [0.1, 0.2]), (2, [-0.3, 0.5])]
+    labels, cents = _lloyd(spark, rows, k=5, n_rounds=2)
+    assert sorted(cents) == [0, 1]
+    assert sorted(labels.values()) == [0, 1]
+    for i, v in rows:
+        assert cents[labels[i]] == v
+
+
+def test_kmeans_lloyd_empty_input(spark):
+    for k in (3, "auto"):
+        labels, cents = _lloyd(spark, [], k=k, n_rounds=2)
+        assert labels == {} and cents == {}
+
+
+def test_kmeans_lloyd_job_count_per_call(spark):
+    """Each round is one collected moment aggregate: an int-k call runs
+    at most 2 jobs per round plus the seed pick."""
+    import uuid
+
+    from datas_spark.operators.clustering import kmeans_lloyd
+
+    df = spark.range(0, 400, 1, 4).select(
+        F.col("id"),
+        F.array(
+            ((F.col("id") % 7) / 10).cast("double"),
+            ((F.col("id") % 5) / 10).cast("double"),
+        ).alias("v"),
+    )
+    sc = spark.sparkContext
+    group = f"lloyd-{uuid.uuid4()}"
+    sc.setJobGroup(group, "kmeans_lloyd job count")
+    try:
+        kmeans_lloyd(df, "id", "v", k=5, n_rounds=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2 * 3 + 2
+
+
 # ---------------------------------------------------------------------------
 # round 10: exact-covariance PCA (power iteration, e12 resync)
 # ---------------------------------------------------------------------------
@@ -214,3 +306,17 @@ def test_pca_exact_is_deterministic_and_validates(spark):
         pca_exact_components(df, "v", k=0)
     with _pytest.raises(ValueError):
         pca_exact_project(df, "id", "v", n_iters=0)
+
+
+def test_pca_exact_skips_null_vectors(spark):
+    """A NULL vector adds no moments and no count: the result equals the
+    same frame without that row (it used to raise "ragged width")."""
+    from datas_spark.operators.clustering import pca_exact_components
+
+    rows = [(i, [float(i % 7) / 7, float(i % 3) / 3]) for i in range(40)]
+    schema = "id long, v array<double>"
+    with_null = spark.createDataFrame([(99, None)] + rows, schema).repartition(3)
+    without = spark.createDataFrame(rows, schema)
+    got = pca_exact_components(with_null, "v", k=2, n_iters=8)
+    assert got == pca_exact_components(without, "v", k=2, dim=2, n_iters=8)
+    assert got[2] == 40

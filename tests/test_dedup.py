@@ -689,6 +689,21 @@ def test_k_core_blocked_equals_iterative(spark):
         assert blocked == iterative, k
 
 
+def test_k_core_both_orientations_are_one_edge(spark):
+    # (a, b) and (b, a) are one undirected edge: both operators must give
+    # the single-orientation result (the iterative peel used to count
+    # such an edge twice in the degree)
+    one = [(1, 2, 0), (1, 3, 0), (2, 3, 0), (3, 4, 0), (10, 11, 1)]
+    both = one + [(b, a, blk) for a, b, blk in one] + [(5, 5, 0)]
+    frame = lambda rows: spark.createDataFrame(rows, ["id_a", "id_b", "blk"])
+    for k in (1, 2):
+        want = sorted(map(tuple, D.k_core(frame(one), k=k).collect()))
+        assert sorted(map(tuple, D.k_core(frame(both), k=k).collect())) == want
+        got = D.k_core_blocked(frame(both), "blk", k=k).collect()
+        assert sorted(map(tuple, got)) == want, k
+    assert want == [(1, 2), (2, 2), (3, 2)]
+
+
 def test_k_core_blocked_enforces_edge_cap(spark):
     pairs = spark.createDataFrame(
         [(1, 2, 0), (2, 3, 0), (1, 3, 0)], ["id_a", "id_b", "blk"]

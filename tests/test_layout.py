@@ -152,6 +152,17 @@ def test_zone_skipping_report_rejects_empty_layouts(spark):
         LAY.zone_skipping_report(df, layouts={}, zone_rows=2, predicates={"x": (1, 2)})
 
 
+def test_zone_skipping_report_rejects_mixed_key_types(spark):
+    df = spark.createDataFrame([(0, 1)], "rid long, x long")
+    layouts = {
+        "natural": F.col("rid"),
+        "sort_x": F.col("x") * 100 + F.col("rid"),
+        "as_text": F.col("rid").cast("string"),
+    }
+    with pytest.raises(ValueError, match=r"one layout key type.*as_text"):
+        LAY.zone_skipping_report(df, layouts, zone_rows=2, predicates={"x": (1, 2)})
+
+
 def test_zone_minmax_covers_all_rows(spark):
     from datas_spark.operators.layout import zone_minmax
 

@@ -213,12 +213,10 @@ def test_all_registered_queries_avoid_scale_antipatterns(spark, sf_dir):
         "rm3_expanded_topk",               # QL corpus constants + 1-row softmax/weight scalars (both passes)
         "annotator_alpha",                 # 1-row coincidence scalars (n, D_o) x 1-row margin scalar
         # round 10
-        "kmeans_clusters",                 # 1-row packed Lloyd centroid frame per round
         "datas_full_pipeline_mllib",       # the flagship's band-cuts frames (same as datas_full_pipeline)
         "ivf_topk_mllib",                  # centroids + query set (same as ivf_topk_learned)
         "maxsim_rerank_topk",              # BM25 1-row corpus constants (recall stage)
         "maxsim_recall_report",            # same constants + 1-row hit/total count scalars
-        "semdedup",                        # 1-row packed Lloyd centroid frame (same as kmeans_clusters)
         "rougeL_novel_instructions",       # 1-row packed broadcast instruction pool
         # round 11
         "quality_classifier_train_exact",  # 1-row packed GD weight row per step + 1-row doc-count scalar

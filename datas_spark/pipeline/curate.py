@@ -87,7 +87,9 @@ def curate_corpus(
     5. paragraph dedup    — corpus-wide first-occurrence segment
        election on ``paragraph_dedup_delimiter``, text rebuilt from
        surviving segments, if a delimiter is given
-    6. near-dup chain     — candidate pairs → connected components →
+    6. near-dup chain     — candidate pairs → connected components
+       (one bounded collect and a driver union-find up to
+       `dedup.CC_DRIVER_MAX_EDGES` edges, distributed rounds above) →
        keep the LONGEST doc per component (ties to smallest id), if a
        threshold is given. ``near_dup_method`` picks the pair backend:
        ``"jaccard"`` (exact n-gram Jaccard ≥ threshold — the precise,
@@ -100,7 +102,7 @@ def curate_corpus(
        MATERIALIZE-ONCE artifacts (`operators.artifacts.pairs_artifact`
        / `components_artifact`) instead of deriving pairs inline — the
        100 TB shape, where ingest computed the pair graph once and no
-       downstream recipe re-runs the inverted index or iterative CC.
+       downstream recipe re-runs the inverted index or the CC.
        Injection semantics are corpus-level: the artifact covers the
        WHOLE corpus, so connectivity through docs that earlier stages
        dropped is preserved (exact duplicates mirror each other's

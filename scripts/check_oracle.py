@@ -4,6 +4,7 @@ the same sf, compare row count + sorted-column value multiset.
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
        python scripts/check_oracle.py [sf_dir] --sample N --seed S
+       python scripts/check_oracle.py [sf_dir] --touched REV
 
 ``--sample N --seed S`` checks a deterministic rotating subset of N
 registered queries (seeded shuffle of the sorted name list) — the
@@ -11,16 +12,29 @@ round-verify recipe runs one rotated sample per round at sf0.1 so
 every query is eventually exercised at a scale beyond the driver's
 fixed 50-query sf0.01 window (VERDICT r6 "Next round" #8). Use the
 round number as the seed so consecutive rounds cover different slices.
+
+``--touched REV`` checks the registered queries whose builders reach a
+function of ``datas_spark/`` that changed since git revision REV
+(committed or not), through the AST call graph: every top-level
+function, method and module-level assignment is a node, and a node
+references each package name it loads (imports, module aliases and
+``self.`` methods resolved; nested functions and lambdas count as their
+enclosing function). A changed line marks the node whose source span
+holds it in the work tree.
 """
 
 from __future__ import annotations
 
+import ast
 import math
 import os
 import random
+import re
+import subprocess
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 
@@ -44,6 +58,122 @@ def _canon(rows, cols):
     return sorted("|".join(_norm(r[i]) for i in order) for r in rows)
 
 
+def _module(path):
+    return path[:-3].replace(os.sep, ".").removesuffix(".__init__")
+
+
+def _nodes(tree):
+    """``(name, start, end, ast)`` per top-level function, method
+    (``Class.method``) and module-level assignment of a parsed module."""
+    for st in tree.body:
+        start = min([st.lineno] + [d.lineno for d in getattr(st, "decorator_list", [])])
+        if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield st.name, start, st.end_lineno, st
+        elif isinstance(st, ast.ClassDef):
+            for m in st.body:
+                if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    yield f"{st.name}.{m.name}", m.lineno, m.end_lineno, m
+        elif isinstance(st, (ast.Assign, ast.AnnAssign)):
+            targets = st.targets if isinstance(st, ast.Assign) else [st.target]
+            for t in targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name):
+                        yield n.id, start, st.end_lineno, st
+
+
+def _bindings(stmts, modules):
+    """Names bound by the import statements among ``stmts``: a module
+    as ``(module, None)``, an imported name as ``(module, name)``."""
+    out = {}
+    for st in stmts:
+        if isinstance(st, ast.Import):
+            for a in st.names:
+                if a.asname:
+                    out[a.asname] = (a.name, None)
+        elif isinstance(st, ast.ImportFrom) and st.module:
+            for a in st.names:
+                sub = f"{st.module}.{a.name}"
+                out[a.asname or a.name] = (sub, None) if sub in modules else (st.module, a.name)
+    return out
+
+
+def _touched_queries(rev, queries):
+    """Registered query names whose builders reach a node changed since
+    ``rev``."""
+    trees = {}
+    for d, _, files in os.walk(os.path.join(ROOT, "datas_spark")):
+        for f in files:
+            if f.endswith(".py"):
+                with open(os.path.join(d, f)) as fh:
+                    trees[_module(os.path.relpath(os.path.join(d, f), ROOT))] = ast.parse(fh.read())
+    nodes = {mod: {n: node for n, _, _, node in _nodes(t)} for mod, t in trees.items()}
+    imports = {mod: _bindings(t.body, trees) for mod, t in trees.items()}
+
+    def resolve(mod, name, depth=0):
+        if name in nodes.get(mod, {}):
+            return (mod, name)
+        target = imports.get(mod, {}).get(name)
+        if target and target[1] and depth < 8:
+            return resolve(*target, depth + 1)
+        return None
+
+    edges = {}
+    for mod, defs in nodes.items():
+        for name, node in defs.items():
+            local = {**imports[mod], **_bindings(ast.walk(node), trees)}
+            cls = name.split(".")[0] if "." in name else None
+            refs = set()
+            for n in ast.walk(node):
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                    target = local.get(n.id)
+                    if target is None:
+                        refs.add(resolve(mod, n.id))
+                    elif target[1]:
+                        refs.add(resolve(*target))
+                elif isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name):
+                    base = n.value.id
+                    if cls and base in ("self", "cls"):
+                        refs.add(resolve(mod, f"{cls}.{n.attr}"))
+                    elif base in local and local[base][1] is None:
+                        refs.add(resolve(local[base][0], n.attr))
+            edges[(mod, name)] = refs - {None}
+
+    diff = subprocess.run(
+        ["git", "diff", "-U0", rev, "--", "datas_spark"],
+        cwd=ROOT, capture_output=True, text=True, check=True,
+    ).stdout
+    spans, path = {}, None
+    for line in diff.splitlines():
+        if line.startswith("+++ "):
+            path = line[6:] if line.startswith("+++ b/") and line.endswith(".py") else None
+        m = re.match(r"@@ -\S+ \+(\d+),?(\d*) @@", line)
+        if m and path:
+            start, count = int(m[1]), 1 if m[2] == "" else int(m[2])
+            # a pure deletion sits between lines start and start + 1
+            spans.setdefault(_module(path), []).append(range(start, start + (count or 2)))
+    changed = {
+        (mod, name)
+        for mod, ranges in spans.items()
+        for name, lo, hi, _ in _nodes(trees[mod])
+        if any(lo <= i <= hi for r in ranges for i in r)
+    }
+
+    out = set()
+    for qname, fn in queries.items():
+        start = (fn.__module__, fn.__qualname__.split(".<locals>")[0])
+        seen, todo = {start}, [start]
+        while todo:
+            cur = todo.pop()
+            if cur in changed:
+                out.add(qname)
+                break
+            for nxt in edges.get(cur, ()):
+                if nxt not in seen:
+                    seen.add(nxt)
+                    todo.append(nxt)
+    return out
+
+
 def main() -> int:
     args = sys.argv[1:]
     sample_n, seed = None, 0
@@ -55,8 +185,19 @@ def main() -> int:
         i = args.index("--seed")
         seed = int(args[i + 1])
         del args[i : i + 2]
+    touched = None
+    if "--touched" in args:
+        i = args.index("--touched")
+        touched = args[i + 1]
+        del args[i : i + 2]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
+    if touched is not None:
+        hits = _touched_queries(touched, entrymod.queries())
+        print(f"touched since {touched}: {len(hits)} queries: {' '.join(sorted(hits))}")
+        if not hits:
+            return 0
+        only |= hits
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TPCH_TABLES:

@@ -195,8 +195,10 @@ def test_cc_block_local_matches_iterative_adversarial_blocks(spark):
 
 
 @pytest.mark.slow
-def test_connected_components_star_matches_union_find_random_graphs(spark):
+def test_connected_components_star_matches_union_find_random_graphs(spark, monkeypatch):
     import random
+
+    monkeypatch.setattr(D, "CC_DRIVER_MAX_EDGES", -1)  # star rounds, not the driver
 
     for seed in (0, 1, 2):
         rng = random.Random(seed)
@@ -216,8 +218,9 @@ def test_connected_components_star_matches_union_find_random_graphs(spark):
         assert got == expected, f"seed {seed}"
 
 
-def test_connected_components_star_high_diameter_chain(spark):
+def test_connected_components_star_high_diameter_chain(spark, monkeypatch):
     # a 24-node chain: min-label needs ~23 rounds, star needs O(log^2)
+    monkeypatch.setattr(D, "CC_DRIVER_MAX_EDGES", -1)  # star rounds, not the driver
     edges = [(i, i + 1) for i in range(23)]
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {
@@ -227,12 +230,114 @@ def test_connected_components_star_high_diameter_chain(spark):
     assert got == {i: 0 for i in range(24)}
 
 
-def test_connected_components_min_label_warns_on_max_iter(spark):
+def test_connected_components_min_label_warns_on_max_iter(spark, monkeypatch):
     import pytest
 
+    monkeypatch.setattr(D, "CC_DRIVER_MAX_EDGES", -1)  # the rounds, not the driver
     pairs = spark.createDataFrame([(i, i + 1) for i in range(9)], "id_a long, id_b long")
     with pytest.warns(RuntimeWarning, match="without\\s+converging"):
         D.connected_components(pairs, max_iter=2)
+
+
+# CC_DRIVER_MAX_EDGES = -1 collects no edge (limit 0), so every graph,
+# the empty one included, takes the distributed rounds
+_CC_PATHS = {"driver": None, "min_label": -1, "star": -1}
+
+
+def _cc_labels(pairs, algorithm="min_label"):
+    out = D.connected_components(pairs, algorithm=algorithm)
+    return {r.node: r.component for r in out.collect()}, out
+
+
+@pytest.mark.parametrize("path", sorted(_CC_PATHS))
+def test_cc_null_endpoints_and_self_loops(spark, monkeypatch, path):
+    """One contract on every path: an edge with a NULL endpoint is
+    dropped, a self-loop keeps its node as a singleton."""
+    if _CC_PATHS[path] is not None:
+        monkeypatch.setattr(D, "CC_DRIVER_MAX_EDGES", _CC_PATHS[path])
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 3), (4, 4), (5, 6)], "id_a long, id_b long"
+    )
+    algorithm = "star" if path == "star" else "min_label"
+    got, _ = _cc_labels(pairs, algorithm)
+    assert got == {1: 1, 2: 1, 4: 4, 5: 5, 6: 5}
+
+
+_CC_GRAPHS = {
+    "chain": ("bigint", [(i, i + 1) for i in range(12)]),
+    "clique": ("bigint", [(a, b) for a in range(6) for b in range(a + 1, 6)]),
+    "hub": ("bigint", [(50, i) for i in range(10, 20)] + [(7, 8)]),
+    "dup_and_reversed": ("bigint", [(3, 1), (1, 3), (1, 3), (9, 8), (8, 9), (2, 2)]),
+    "strings": ("string", [("z", "é"), ("b", "z"), ("x", "y"), ("ü", "é")]),
+    "empty": ("bigint", []),
+}
+
+
+@pytest.mark.parametrize("graph", sorted(_CC_GRAPHS))
+@pytest.mark.parametrize("algorithm", ["min_label", "star"])
+def test_cc_driver_cap_boundary(spark, monkeypatch, graph, algorithm):
+    """At exactly CC_DRIVER_MAX_EDGES edge rows the labels come from the
+    driver as a local relation; one row over, from the distributed
+    rounds. Both equal the min-id union-find."""
+    id_type, edges = _CC_GRAPHS[graph]
+    pairs = spark.createDataFrame(edges, f"id_a {id_type}, id_b {id_type}")
+    want = _union_find_labels(edges)
+    monkeypatch.setattr(D, "CC_DRIVER_MAX_EDGES", len(edges))
+    at_cap, df = _cc_labels(pairs, algorithm)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert dict(df.dtypes) == {"node": id_type, "component": id_type}
+    monkeypatch.setattr(D, "CC_DRIVER_MAX_EDGES", len(edges) - 1)
+    over_cap, df = _cc_labels(pairs, algorithm)
+    assert "LocalTableScan" not in df._jdf.queryExecution().executedPlan().toString()
+    assert at_cap == over_cap == want
+
+
+@pytest.mark.parametrize("algorithm", ["min_label", "star"])
+def test_cc_over_cap_runs_the_pair_plan_once(spark, monkeypatch, algorithm):
+    """Above the cap the rounds read the edge checkpoint the bounded
+    collect filled: every pair row is computed exactly once (counted in
+    the pair plan itself; a job count cannot tell a recomputed stage
+    from a new one)."""
+    monkeypatch.setattr(D, "CC_DRIVER_MAX_EDGES", 3)
+    acc = spark.sparkContext.accumulator(0)
+
+    def seen(x):
+        acc.add(1)
+        return x
+
+    edges = [(i, i + 1) for i in range(9)] + [(20, 21), (21, 22)]
+    base = spark.createDataFrame(edges, "id_a long, id_b long").repartition(3)
+    pairs = base.select(
+        F.udf(seen, "long").asNondeterministic()("id_a").alias("id_a"), "id_b"
+    )
+    got, _ = _cc_labels(pairs, algorithm)
+    assert got == _union_find_labels(edges)
+    assert acc.value == len(edges)
+
+
+def test_near_dedup_keep_best_job_count_small_graph(spark):
+    """A small near-dup graph costs one bounded collect, not one Spark
+    action per propagation round (a 16-node chain needs ~16 rounds)."""
+    import uuid
+
+    docs = spark.range(0, 40, 1, 4).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 5).cast("double").alias("score")
+    )
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(15)], "id_a long, id_b long"
+    ).repartition(4)
+    sc = spark.sparkContext
+    group = f"near-dup-{uuid.uuid4()}"
+    sc.setJobGroup(group, "near_dedup_keep_best job count")
+    try:
+        rows = D.near_dedup_keep_best(docs, "doc_id", "score", pairs).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    kept = {r.doc_id for r in rows if r.is_representative == 1}
+    assert kept == {4} | set(range(16, 40))
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
 
 
 def test_near_dedup_keep_first_elects_min_id(spark):

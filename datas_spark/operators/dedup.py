@@ -14,10 +14,14 @@ operator family. All variants here are shuffle-conscious:
            differ in few bits.
 - n-gram Jaccard: explode shingles → inverted index (one groupBy on
            the shingle hash) → upper triangle of each posting list
-           generated map-side → count per pair / union — exact, but
-           pair cardinality bounded by shared-shingle blocking (plus a
-           frequency cap to kill hot-shingle skew). Every exact pair
-           operator here shares that fan (``_posting_pairs``).
+           fanned map-side by two codegen'd generators (each member,
+           then the members after it) → count per pair / union —
+           exact, but pair cardinality bounded by shared-shingle
+           blocking (plus a frequency cap to kill hot-shingle skew).
+           Every exact pair operator here, the hamming family
+           included, shares that triangle (``_triangle``, fed by
+           ``_posting_pairs``). Docs with a NULL id take no part in
+           any pair operator.
 - embedding cosine: blocked self-join within a blocking key.
 
 Hash discipline: hashes whose VALUES are query output (MinHash
@@ -539,19 +543,30 @@ def _shingle_frame(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFra
     )
 
 
-def _upper_triangle(arr: Column, emit, keep=None) -> Column:
-    """Every pair of a sorted posting list ``arr`` as one flat array of
-    ``emit(x, y)``, x before y in the list; ``keep(x, y)`` prunes a pair
-    before it is built. Generated map-side: callers explode it behind an
-    explode barrier, so only emitted pairs ever reach a shuffle."""
+def _triangle(posts: DataFrame, emit, keep=None, carry=()) -> DataFrame:
+    """Every pair of each sorted posting list ``__docs`` in ``posts`` as
+    one ``__p`` = ``emit(x, y)`` row, x before y in the list, with the
+    ``carry`` columns alongside; ``keep(x, y)`` prunes a pair before it
+    is built. ``x`` and ``y`` are bound columns of two generators:
+    ``posexplode`` yields each member with its position, then
+    ``explode_outer`` of the slice after it yields its partners. Both
+    generators, ``keep`` and ``emit`` compile into one map-side codegen
+    stage, so only emitted pairs reach a shuffle and no list's pair set
+    is ever built as one array.
 
-    def row(x, i):
-        rest = F.slice(arr, i + F.lit(2), F.size(arr) - i - F.lit(1))
-        if keep is not None:
-            rest = F.filter(rest, lambda y: keep(x, y))
-        return F.transform(rest, lambda y: emit(x, y))
-
-    return F.flatten(F.transform(arr, row))
+    explode_outer + isNotNull on the partner slice: plain explode
+    triggers InferFiltersFromGenerate, which clones the slice into a
+    pushed-down per-row filter. A NULL partner only ever comes from the
+    empty slice of a list's last member (collect_list drops NULLs)."""
+    firsts = posts.select(*carry, "__docs", F.posexplode("__docs").alias("__i", "__x"))
+    rest = F.slice("__docs", F.col("__i") + 2, F.size("__docs") - F.col("__i") - 1)
+    pairs = firsts.select(*carry, "__x", F.explode_outer(rest).alias("__y")).where(
+        F.col("__y").isNotNull()
+    )
+    x, y = F.col("__x"), F.col("__y")
+    if keep is not None:
+        pairs = pairs.where(keep(x, y))
+    return pairs.select(*carry, emit(x, y).alias("__p"))
 
 
 def _posting_pairs(
@@ -560,24 +575,17 @@ def _posting_pairs(
     """The inverted-index pair fan: ONE shuffle groups ``exploded`` on
     ``key`` into sorted posting lists of ``member``, lists with fewer
     than 2 members (or more than ``max_df``, the hot-key skew cap, when
-    set) are dropped, and the upper triangle of each list is exploded
-    into one ``__p`` row per ``emit(x, y)`` pair — no self-join (a
-    sort-merge self-join on hot keys re-shuffles the full posting set
-    twice and explodes inside the join instead of here).
-
-    explode_outer + isNotNull on the GENERATED column: plain explode
-    triggers InferFiltersFromGenerate, which clones the whole pair
-    expression into a pushed-down per-row filter."""
+    set) are dropped, and ``_triangle`` fans each list into one ``__p``
+    row per ``emit(x, y)`` pair — no self-join (a sort-merge self-join
+    on hot keys re-shuffles the full posting set twice and explodes
+    inside the join instead of here)."""
     posts = exploded.groupBy(key).agg(
         F.array_sort(F.collect_list(member)).alias("__docs")
     )
     posts = posts.where(F.size("__docs") >= 2)
     if max_df is not None:
         posts = posts.where(F.size("__docs") <= max_df)
-    pairs = _upper_triangle(F.col("__docs"), emit, keep)
-    return posts.select(F.explode_outer(pairs).alias("__p")).where(
-        F.col("__p").isNotNull()
-    )
+    return _triangle(posts, emit, keep)
 
 
 def _shingle_overlap(
@@ -592,8 +600,14 @@ def _shingle_overlap(
     at least one n-gram shingle (id_a < id_b): shared shingle count and
     both shingle-set sizes — the core both the Jaccard and containment
     scores are computed from. ``keep(x, y)`` prunes pairs of
-    ``(__id, __n)`` structs before they are emitted."""
-    sh = _shingle_frame(df, id_col, text_col, n).withColumn("__n", F.size("__sh"))
+    ``(__id, __n)`` structs before they are emitted.
+
+    Docs with a NULL id take no part: they cannot be a pair endpoint,
+    and several of them would share one pair key and sum their shared
+    counts into a score above 1."""
+    sh = _shingle_frame(
+        df.where(F.col(id_col).isNotNull()), id_col, text_col, n
+    ).withColumn("__n", F.size("__sh"))
     exploded = sh.select("__id", "__n", F.explode_outer("__sh").alias("__s")).where(
         F.col("__s").isNotNull()
     )
@@ -639,8 +653,8 @@ def ngram_jaccard_pairs(
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
     # length filter (exact, from the set-similarity-join literature):
-    # J(A,B) >= t forces t*max(|A|,|B|) <= min(|A|,|B|) — prune inside
-    # the pair transform, BEFORE the pair ever hits the shuffle. Prunes
+    # J(A,B) >= t forces t*max(|A|,|B|) <= min(|A|,|B|) — prune in the
+    # triangle's map-side filter, BEFORE the pair ever hits the shuffle. Prunes
     # quadratically on corpora with varied doc lengths.
     shared = _shingle_overlap(
         df,
@@ -1202,6 +1216,10 @@ def near_dedup_keep_first(
     ``is_representative`` (1 = keep, 0 = drop). Filter on it for the
     deduplicated corpus; keep the full table for dedup audit trails.
 
+    NULL ids (the rule ``near_dedup_keep_best`` shares): a row whose id
+    is NULL can be no pair endpoint, so it has no duplicate — it keeps
+    itself, with ``component`` NULL and ``is_representative`` 1.
+
     ``components`` injects precomputed ``(node, component)`` labels
     (e.g. the persisted ``operators.artifacts.components_artifact``) —
     the 100 TB shape where CC runs once per ingest and every consumer
@@ -1216,9 +1234,16 @@ def near_dedup_keep_first(
         df.join(comp, id_col, "left")
         .withColumn("component", F.coalesce("component", F.col(id_col)))
         .withColumn(
-            "is_representative", (F.col("component") == F.col(id_col)).cast("int")
+            "is_representative",
+            _null_id_kept(id_col, F.col("component") == F.col(id_col)),
         )
     )
+
+
+def _null_id_kept(id_col: str, elected: Column) -> Column:
+    """``is_representative`` under the keep_* NULL-id rule: ``elected``
+    decides every row with an id; a NULL-id row always keeps itself."""
+    return F.when(F.col(id_col).isNull(), F.lit(1)).otherwise(elected.cast("int"))
 
 
 def near_dedup_keep_best(
@@ -1244,6 +1269,9 @@ def near_dedup_keep_best(
 
     ``components`` injects precomputed ``(node, component)`` labels
     (the persisted artifact path); CC then never re-runs here.
+
+    NULL ids follow the ``near_dedup_keep_first`` rule: each such row
+    keeps itself (``component`` NULL, ``is_representative`` 1).
     """
     comp = (
         components
@@ -1262,11 +1290,13 @@ def near_dedup_keep_best(
     # no broadcast hint on the election table: it is one row per
     # component, which is tiny for dup-heavy corpora but DATA-SCALE when
     # most docs are unique — AQE picks broadcast vs shuffle from the
-    # real runtime size
+    # real runtime size. Left join: a NULL-id row's NULL component
+    # matches no election row.
     return (
-        labeled.join(best, "component")
+        labeled.join(best, "component", "left")
         .withColumn(
-            "is_representative", (F.col(id_col) == F.col("__keep_id")).cast("int")
+            "is_representative",
+            _null_id_kept(id_col, F.col(id_col) == F.col("__keep_id")),
         )
         .drop("__keep_id")
     )
@@ -1465,10 +1495,10 @@ def _auto_cap_expr(n_col, width: int):
     FLOOR, CEILING)``. The FLOOR keeps small corpora exact (no bucket
     anywhere near it at the test scales — measured max occupancy 321 at
     the synthesized sf1 vs floor 1024); the CEILING bounds the one
-    allocation that actually grows quadratically, the per-bucket pair
-    array materialized behind the explode barrier (cap² / 2 structs:
-    ~50 MB at 2048 — one bounded task-local allocation, vs unbounded
-    growth with corpus size uncapped). Between them the cap tracks
+    cost that actually grows quadratically, the per-bucket candidate
+    pairs the map-side triangle generates (cap² / 2 rows: ~2.1M at 2048
+    — bounded per bucket, vs unbounded growth with corpus size
+    uncapped). Between them the cap tracks
     MULT× the uniform-hash expected occupancy, so only degenerate
     buckets (boilerplate/template collisions holding >16x their fair
     share) are ever dropped."""
@@ -1489,12 +1519,15 @@ def _hamming_banded(df, id_col: str, sig_col: str, bits: int, bands: int):
     """Shared banding front end for the hamming family: one row per
     (doc, band) with the band's bit-slice value. Returns
     ``(banded_frame, width)``; frame columns are
-    ``(__id, simhash, band, bval)``."""
+    ``(__id, simhash, band, bval)``. Rows with a NULL id take no part
+    (no pair may have a NULL endpoint)."""
     if bits % bands != 0:
         raise ValueError(f"bands must divide bits, got {bits}/{bands}")
     width = bits // bands
     mask = (1 << width) - 1
-    sig = df.select(F.col(id_col).alias("__id"), F.col(sig_col).alias("simhash"))
+    sig = df.where(F.col(id_col).isNotNull()).select(
+        F.col(id_col).alias("__id"), F.col(sig_col).alias("simhash")
+    )
     band_structs = F.array(
         *[
             F.struct(
@@ -1512,17 +1545,24 @@ def _hamming_banded(df, id_col: str, sig_col: str, bits: int, bands: int):
     return banded, width
 
 
-def _bucket_pair_arr():
-    """All in-bucket candidate pairs of a ``__ms`` member list, as one
-    array of (id_a, id_b, hamming) structs — generated behind the
-    explode barrier so only hamming-filtered pairs reach any shuffle."""
-    return _upper_triangle(
-        F.col("__ms"),
-        lambda x, y: F.struct(
-            x["__id"].alias("id_a"),
-            y["__id"].alias("id_b"),
-            F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])).cast("int").alias("hamming"),
-        ),
+def _bucket_pairs(buckets: DataFrame, max_hamming: int, carry=()) -> DataFrame:
+    """``(*carry, id_a, id_b, hamming)`` for every in-bucket pair of the
+    ``__docs`` member lists within ``max_hamming`` bits — fanned by
+    ``_triangle``, so only hamming-filtered pairs reach any shuffle."""
+    return (
+        _triangle(
+            buckets,
+            lambda x, y: F.struct(
+                x["__id"].alias("id_a"),
+                y["__id"].alias("id_b"),
+                F.bit_count(x["simhash"].bitwiseXOR(y["simhash"]))
+                .cast("int")
+                .alias("hamming"),
+            ),
+            carry=carry,
+        )
+        .select(*carry, "__p.id_a", "__p.id_b", "__p.hamming")
+        .where(F.col("hamming") <= max_hamming)
     )
 
 
@@ -1572,26 +1612,21 @@ def hamming_near_dup_pairs(
     # is the expensive stage.) Bucket member lists are bounded by
     # occupancy — the wide-signature config and/or ``max_bucket_size``
     # keep them small; candidate pairs are generated and
-    # hamming-filtered per bucket behind the explode barrier, so only
-    # genuine near-dup pairs reach the cross-band dedup shuffle.
+    # hamming-filtered per bucket map-side, so only genuine near-dup
+    # pairs reach the cross-band dedup shuffle.
     buckets = banded.groupBy("band", "bval").agg(
-        F.sort_array(F.collect_list(F.struct("__id", "simhash"))).alias("__ms")
+        F.sort_array(F.collect_list(F.struct("__id", "simhash"))).alias("__docs")
     )
     if max_bucket_size == "auto":
         n1 = df.agg(F.count(F.lit(1)).alias("__n"))
         buckets = (
             buckets.join(F.broadcast(n1))
-            .where(F.size("__ms") <= _auto_cap_expr(F.col("__n"), width))
+            .where(F.size("__docs") <= _auto_cap_expr(F.col("__n"), width))
             .drop("__n")
         )
     elif max_bucket_size is not None:
-        buckets = buckets.where(F.size("__ms") <= max_bucket_size)
-    return (
-        buckets.select(F.explode(_bucket_pair_arr()).alias("__pp"))
-        .select("__pp.id_a", "__pp.id_b", "__pp.hamming")
-        .where(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-    )
+        buckets = buckets.where(F.size("__docs") <= max_bucket_size)
+    return _bucket_pairs(buckets, max_hamming).dropDuplicates(["id_a", "id_b"])
 
 
 def hamming_cap_agreement(
@@ -1616,12 +1651,10 @@ def hamming_cap_agreement(
     cap to make the trade visible at small corpus scales."""
     banded, _ = _hamming_banded(df, id_col, sig_col, bits, bands)
     buckets = banded.groupBy("band", "bval").agg(
-        F.sort_array(F.collect_list(F.struct("__id", "simhash"))).alias("__ms")
-    ).withColumn("__ok", F.size("__ms") <= F.lit(max_bucket_size))
+        F.sort_array(F.collect_list(F.struct("__id", "simhash"))).alias("__docs")
+    ).withColumn("__ok", F.size("__docs") <= F.lit(max_bucket_size))
     per_pair = (
-        buckets.select("__ok", F.explode(_bucket_pair_arr()).alias("__pp"))
-        .select("__ok", "__pp.id_a", "__pp.id_b", "__pp.hamming")
-        .where(F.col("hamming") <= max_hamming)
+        _bucket_pairs(buckets, max_hamming, carry=("__ok",))
         .groupBy("id_a", "id_b")
         .agg(F.max(F.col("__ok").cast("int")).alias("__in_capped"))
     )
@@ -2706,7 +2739,7 @@ def winnowing_near_dup_pairs(
     Round 12 (guide §2.4): the pair stage is the `ngram_jaccard_pairs`
     inverted index — ONE groupBy(fp_hash) collects each fingerprint's
     (df-capped) posting list and the upper triangle is generated
-    map-side behind the explode barrier. The previous self-join
+    map-side. The previous self-join
     formulation fed the fingerprint frame into BOTH join sides, so the
     whole md5 gram-hash + window-selection pass evaluated TWICE
     (Catalyst does not reuse the exchange across the renamed a/b

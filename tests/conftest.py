@@ -34,6 +34,23 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def codegen_compiles(spark):
+    """``codegen_compiles(fn)`` runs ``fn()`` and returns how many
+    codegen sources the JVM compiled meanwhile (the
+    ``CodegenMetrics.METRIC_SOURCE_CODE_SIZE`` count delta). A source
+    found in the codegen cache is not compiled, so a repeat of the same
+    plans reads 0 while the cache holds them all."""
+    hist = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_SOURCE_CODE_SIZE()
+
+    def compiles(fn) -> int:
+        before = hist.getCount()
+        fn()
+        return hist.getCount() - before
+
+    return compiles
+
+
+@pytest.fixture(scope="session")
 def sf_dir():
     # override to run data-parameterized suites (e.g. the plan sweep)
     # against another scale, such as the synthesized sf1:

@@ -308,3 +308,29 @@ def test_kmeans_lloyd_auto_k_grows_with_corpus(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         kmeans_lloyd(frame(10), "id", "v", k="bogus")
+
+
+def test_curate_corpus_repeat_pass_compiles_nothing(spark, sf_dir, codegen_compiles):
+    """A repeat of the same recipe reuses every generated class: the
+    session's codegen cache holds one whole pass, so the second run
+    compiles 0 sources. (With Spark's 100-entry default a Jaccard
+    near-dup recipe evicted its own classes and recompiled ~90 per
+    repeat.) The knobs are the dedup_lexical benchmark's."""
+    from datas_spark.io.sources import read_table
+
+    docs = read_table(spark, sf_dir, "documents").where("doc_id < 300")
+
+    def run():
+        curate_corpus(
+            docs,
+            benchmark=docs.where("doc_id < 20"),
+            domain_col="lang",
+            max_dup_token_frac=0.9,
+            max_top_bigram_frac=0.9,
+            near_dup_threshold=0.2,
+            temperature=2.0,
+            split_weights={"train": 0.9, "test": 0.1},
+        ).collect()
+
+    run()  # compiles what earlier tests have not left in the cache
+    assert codegen_compiles(run) == 0

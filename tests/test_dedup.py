@@ -1486,3 +1486,181 @@ def test_posting_list_edges(spark, op, case):
     got = {(r.id_a, r.id_b) for r in run(df, cap).collect()}
     want = {(0, 1), (0, 2), (1, 2)} if case == "cap_kept" else set()
     assert got == want
+
+
+# ---------------------------------------------------------------------------
+# one triangle: every posting-list pair operator fans its lists through
+# dedup._triangle (posexplode, then explode_outer of the slice after)
+
+
+def _brute_hamming(sigs, bits, bands, max_hamming, cap=None):
+    """{(id_a, id_b): (hamming, in_a_capped_bucket)} by enumerating each
+    band bucket's member pairs in Python."""
+    from collections import defaultdict
+    from itertools import combinations
+
+    width = bits // bands
+    buckets = defaultdict(list)
+    for i, s in sigs:
+        for b in range(bands):
+            buckets[(b, (s >> (b * width)) & ((1 << width) - 1))].append((i, s))
+    pairs = {}
+    for members in buckets.values():
+        ok = cap is None or len(members) <= cap
+        for (ia, sa), (ib, sb) in combinations(sorted(members), 2):
+            h = bin(sa ^ sb).count("1")
+            if h <= max_hamming:
+                pairs[(ia, ib)] = (h, pairs.get((ia, ib), (h, False))[1] or ok)
+    return pairs, buckets
+
+
+def test_hamming_pairs_and_cap_agreement_match_brute_force(spark):
+    import random
+
+    rng = random.Random(8)
+    sigs = [(i, rng.getrandbits(12)) for i in range(80)]
+    df = spark.createDataFrame(sigs, "id long, sig long")
+    kw = dict(bits=12, bands=4, max_hamming=3)
+    want, buckets = _brute_hamming(sigs, 12, 4, 3)
+    assert len(want) > 50  # the random set really fans pairs
+    got = {
+        (r.id_a, r.id_b): r.hamming
+        for r in D.hamming_near_dup_pairs(df, "id", "sig", **kw).collect()
+    }
+    assert got == {k: h for k, (h, _) in want.items()}
+
+    cap = 12
+    capped, _ = _brute_hamming(sigs, 12, 4, 3, cap)
+    got_capped = {
+        (r.id_a, r.id_b)
+        for r in D.hamming_near_dup_pairs(
+            df, "id", "sig", max_bucket_size=cap, **kw
+        ).collect()
+    }
+    assert got_capped == {k for k, (_, ok) in capped.items() if ok}
+    hot = sum(len(m) > cap for m in buckets.values())
+    both = len(got_capped)
+    only = len(capped) - both
+    assert hot > 0 and only > 0  # the cap really binds
+    (row,) = D.hamming_cap_agreement(
+        df, "id", "sig", max_bucket_size=cap, **kw
+    ).collect()
+    assert (row.n_buckets_hot, row.pairs_both, row.pairs_only_uncapped) == (
+        hot,
+        both,
+        only,
+    )
+    assert row.recall_pct == round(100.0 * both / (both + only), 6)
+
+
+def test_posting_pairs_repeated_members_pair_by_position(spark):
+    """A member listed twice in one posting list pairs with itself and
+    pairs twice with every other member: pairs are by list position,
+    x before y in the sorted list."""
+    from collections import Counter
+    from itertools import combinations
+
+    lists = {1: [3, 1, 3, 2], 2: [5, 5], 3: [4], 4: [7, 6, 7, 7]}
+    rows = [(k, m) for k, ms in lists.items() for m in ms]
+    df = spark.createDataFrame(rows, "k long, m long")
+    got = Counter(
+        (r.a, r.b)
+        for r in D._posting_pairs(
+            df, "k", "m", None, lambda x, y: F.struct(x.alias("a"), y.alias("b"))
+        )
+        .select("__p.a", "__p.b")
+        .collect()
+    )
+    want = Counter(p for ms in lists.values() for p in combinations(sorted(ms), 2))
+    assert got == want
+
+
+def test_posting_pairs_keep_that_prunes_everything(spark):
+    df = spark.createDataFrame(
+        [(1, i) for i in range(6)] + [(2, i) for i in range(3)], "k long, m long"
+    )
+    out = D._posting_pairs(
+        df,
+        "k",
+        "m",
+        None,
+        lambda x, y: F.struct(x.alias("a"), y.alias("b")),
+        keep=lambda x, y: x > y,  # sorted lists: x never exceeds y
+    )
+    assert out.columns == ["__p"]
+    assert out.collect() == []
+
+
+def test_ngram_jaccard_fan_is_codegen_generators(spark):
+    """The executed pair fan holds no lambda function, and both of its
+    Generates run inside WholeStageCodegen (a ``*(n)`` prefix)."""
+    import re
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e g"), (3, "a b c x y z")],
+        "id long, v string",
+    )
+    pairs = D.ngram_jaccard_pairs(df, "id", "v", threshold=0.1)
+    assert {(r.id_a, r.id_b) for r in pairs.collect()} == {(1, 2), (1, 3), (2, 3)}
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    # the fan: every operator above the aggregate that collects the lists
+    fan = final[: next(i for i, ln in enumerate(final) if "collect_list(" in ln)]
+    assert fan and not any("lambdafunction" in ln for ln in fan)
+    gens = [ln for ln in fan if re.search(r"\bGenerate ", ln)]
+    assert len(gens) == 2
+    assert any("posexplode(__docs" in g for g in gens)
+    assert any("explode(slice(__docs" in g for g in gens)
+    assert all(re.match(r"^[\s|:+-]*\*\(\d+\) Generate ", g) for g in gens)
+
+
+# NULL ids: no pair operator emits a NULL endpoint, and keep_* keep every
+# NULL-id row as its own representative
+_NULL_ID_DOCS = [
+    (1, "a b c d e f"),
+    (2, "a b c d e f g"),
+    (None, "a b c d e f"),
+    (None, "a b c d e f h"),
+    (3, "p q r s t u"),
+]
+
+
+_NULL_ID_OPS = {
+    "jaccard": lambda df: D.ngram_jaccard_pairs(df, "id", "v", threshold=0.1),
+    "containment": lambda df: D.ngram_containment_pairs(df, "id", "v", threshold=0.1),
+    "simhash": lambda df: D.simhash_near_dup_pairs(df, "id", "v", max_hamming=3),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_NULL_ID_OPS))
+def test_pair_operators_skip_null_ids(spark, op):
+    """NULL-id docs (one an exact copy of doc 1) change no pair: the
+    output equals the run without them."""
+    run = _NULL_ID_OPS[op]
+    df = spark.createDataFrame(_NULL_ID_DOCS, "id long, v string")
+    got = sorted((tuple(r) for r in run(df).collect()), key=str)
+    want = run(df.where(F.col("id").isNotNull())).collect()
+    assert got == sorted((tuple(r) for r in want), key=str)
+    assert all(a is not None and b is not None for a, b, _ in got)
+    if op != "simhash":
+        assert [(a, b) for a, b, _ in got] == [(1, 2)]
+        assert all(0.0 < s <= 1.0 for *_, s in got)
+
+
+def test_keep_first_and_keep_best_share_the_null_id_rule(spark):
+    df = spark.createDataFrame(
+        [(1, 5.0), (2, 9.0), (None, 1.0), (None, 2.0), (3, 0.0)], "id long, score double"
+    )
+    pairs = spark.createDataFrame([(1, 2), (None, 1)], "id_a long, id_b long")
+    first = D.near_dedup_keep_first(df, "id", pairs).collect()
+    best = D.near_dedup_keep_best(df, "id", "score", pairs).collect()
+
+    def by_row(rows):
+        return sorted(
+            ((r.id, r.score, r.component, r.is_representative) for r in rows),
+            key=lambda t: (t[0] is not None, t[0] or 0, t[1]),
+        )
+
+    nulls = [(None, 1.0, None, 1), (None, 2.0, None, 1)]
+    assert by_row(first) == nulls + [(1, 5.0, 1, 1), (2, 9.0, 1, 0), (3, 0.0, 3, 1)]
+    assert by_row(best) == nulls + [(1, 5.0, 1, 0), (2, 9.0, 1, 1), (3, 0.0, 3, 1)]

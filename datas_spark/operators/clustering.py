@@ -12,7 +12,10 @@ shape: per round one collected ≤ k·dim-row moment aggregate, with the k
 centroids held on the driver and inlined into the next round's
 map-only assignment as one literal (under AQE every action over a
 shuffled plan — a lazy checkpoint included — runs its stages anyway, so
-keeping the centroids in-plan saved no jobs).
+keeping the centroids in-plan saved no jobs). Its round loop,
+`_lloyd_rounds`, is the one Lloyd core in the engine: the PQ codebook
+trainer (`similarity.pq_codebooks_lloyd`) runs its m subspaces through
+it as one grouped instance.
 
 t-SNE (F4) has no distributed formulation; the reference uses it only
 for a scatter-plot png (main.py:360-376). We keep it driver-side,
@@ -21,13 +24,16 @@ gated on a small sampled collect — viz tooling, not engine path.
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Context, Decimal
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# shared quantization default: kmeans_lloyd and every trainer that must
-# stay bit-aligned with its Lloyd oracle CTEs (e.g. the grouped PQ
-# codebook trainer) reference THIS constant — a drifted copy would
-# silently desynchronize codebooks from the oracle (ADVICE r11)
+# shared quantization default: kmeans_lloyd and every other caller of
+# the Lloyd core (`_lloyd_rounds`; the PQ codebook trainer) reference
+# THIS constant — the oracle CTEs replay every Lloyd run at this scale,
+# so a drifted copy would silently desynchronize codebooks from them
 DEFAULT_SCALE = 1_000_000
 
 __all__ = [
@@ -119,23 +125,21 @@ def kmeans_lloyd(
 
     Plan shape (scale contract): the k centroids live on the DRIVER as
     Python int lists — MLlib's own "only k centroids reach the driver"
-    shape. Assignment is a map-only fold per point (``array_min`` over
-    per-centroid integer distances against the centroids inlined as ONE
-    constant-folded array literal), NEVER a points×centroids shuffle;
-    each round's update is one combinable posexplode → (cluster, dim)
-    aggregate whose ≤ k·dim rows are collected, and the driver applies
-    ``s // n`` (Python floor division on exact ints — a NULL sum stays
-    NULL; a cluster with no moment rows keeps its previous centroid).
-    Why a collect per round instead of a lazy in-plan centroid row:
-    under AQE any action over a plan with exchanges — including the
-    lazy ``localCheckpoint`` a lazy round would need to keep lineage
-    flat — already runs every query stage, so a lazy round costs the
-    same jobs plus a broadcast cross join and a per-slot rebuild of the
-    centroid row. Per call: one seed collect (plus one count for
-    ``k="auto"``) and two jobs per round; the points frame is lazily
-    localCheckpoint-ed so rounds rescan it, not ``df``. At 10⁹ rows the
-    per-round cost is one scan + one k·dim-row aggregate, exactly
-    KMeans' lower bound.
+    shape — and the rounds run in `_lloyd_rounds`, the one Lloyd core
+    the grouped PQ codebook trainer shares: a map-only assignment fold
+    per point against the centroids inlined as ONE constant-folded
+    array literal (NEVER a points×centroids shuffle), then one collected
+    ≤ k·dim-row (cluster, dim) moment aggregate and the driver's exact
+    ``s // n``. Why a collect per round instead of a lazy in-plan
+    centroid row: under AQE any action over a plan with exchanges —
+    including the lazy ``localCheckpoint`` a lazy round would need to
+    keep lineage flat — already runs every query stage, so a lazy round
+    costs the same jobs plus a broadcast cross join and a per-slot
+    rebuild of the centroid row. Per call: one seed collect (plus one
+    count for ``k="auto"``) and two jobs per round; the points frame is
+    lazily localCheckpoint-ed so rounds rescan it, not ``df``. At 10⁹
+    rows the per-round cost is one scan + one k·dim-row aggregate,
+    exactly KMeans' lower bound.
 
     Σq per (cluster, dim) stays long-exact up to ~2^63/(|x|max·scale)
     rows per cluster (≈9e12 at the e6 default with unit-norm vectors —
@@ -162,8 +166,6 @@ def kmeans_lloyd(
     int, centroid array<double>)`` with components ``c/scale`` — the
     quantizer frame `ivf_topk_fixed` consumes as learned cells.
     """
-    import math
-
     auto_k = isinstance(k, str)
     if auto_k:
         # k="auto" (VERDICT r10 #3): grow k with the corpus —
@@ -198,57 +200,11 @@ def kmeans_lloyd(
     if auto_k:
         n = pts.count()
         k = max(auto_min_k, min(auto_max_k, math.ceil(math.sqrt(n / auto_target))))
-    # init: the k smallest (md5(id), id); q only orders duplicate ids
-    seeds = (
-        pts.select(F.md5(F.col("__id").cast("string")).alias("__h"), "__id", "__q")
-        .orderBy("__h", "__id", "__q")
-        .limit(k)
-        .collect()
-    )
-    cents = [r["__q"] for r in seeds]
-
-    def _assign(extra: tuple = ()) -> DataFrame:
-        # ties → smaller index: the (d, j) struct minimum; a NULL
-        # distance (NULL vector / component, ragged width) sorts first
-        best = F.expr(
-            f"array_min(transform({_centroid_literal(cents)}, s -> named_struct("
-            "'d', aggregate(zip_with(__q, s.c, (a, b) -> (a - b) * (a - b)),"
-            " 0L, (acc, v) -> acc + v), 'j', s.j)))"
-        )
-        return pts.select("__id", "__q", *extra, best["j"].alias("__cluster"))
-
-    for _ in range(n_rounds):
-        # narrow (cluster, d) moments: a wide per-dimension-column
-        # aggregate measured 2x slower at dim=64 (codegen cost per round)
-        rows = (
-            _assign()
-            .select("__cluster", F.posexplode("__q").alias("__d", "__x"))
-            .groupBy("__cluster", "__d")
-            .agg(
-                F.sum("__x").alias("__s"),
-                F.count(F.lit(1)).cast("long").alias("__n"),
-            )
-            .collect()
-        )
-        # exact floor mean per slot of the previous centroid's width (a
-        # NULL sum stays NULL); a cluster with no moment rows keeps its
-        # previous centroid
-        moments = {
-            (r["__cluster"], r["__d"]): None if r["__s"] is None else r["__s"] // r["__n"]
-            for r in rows
-        }
-        members = {j for j, _ in moments}
-        cents = [
-            [moments.get((j, d)) for d in range(len(c))]
-            if j in members and c is not None
-            else c
-            for j, c in enumerate(cents)
-        ]
-
-    final = _assign(extra=tuple(carry)).select(
+    cents = _lloyd_rounds(pts, _lloyd_seeds(pts, k), n_rounds)
+    final = pts.select(
         F.col("__id").alias(id_col),
         *carry,
-        F.col("__cluster").alias("cluster"),
+        _nearest(cents).alias("cluster"),
     )
     centroids = (
         df.sparkSession.range(1)
@@ -263,6 +219,93 @@ def kmeans_lloyd(
     return final, centroids
 
 
+def _lloyd_seeds(pts: DataFrame, k: int) -> list:
+    """The Lloyd init: ``__q`` of the k rows of ``pts`` with the smallest
+    ``(md5(__id), __id)`` — a seedless deterministic draw any engine
+    reproduces; ``__q`` only orders duplicate ids."""
+    return [
+        r["__q"]
+        for r in pts.select(F.md5(F.col("__id").cast("string")).alias("__h"), "__id", "__q")
+        .orderBy("__h", "__id", "__q")
+        .limit(k)
+        .collect()
+    ]
+
+
+def _lloyd_rounds(
+    pts: DataFrame, cents: list, n_rounds: int, group: str | None = None
+) -> list:
+    """``n_rounds`` Lloyd rounds over the quantized points ``pts.__q``,
+    starting from the driver-held ``cents``; returns the final centroids.
+
+    Each round is one map-only assignment (`_nearest`) and one collected
+    ``(cluster, d)`` moment aggregate of at most k·dim rows; the driver
+    then sets each centroid to the exact floor mean ``s // n`` per slot
+    of its previous width (a NULL sum stays NULL). A cluster with no
+    moment rows, or a centroid seeded from a NULL vector, keeps its
+    previous value. The assignment is its own projection under the
+    ``posexplode``: written into the generator's select, Catalyst would
+    re-evaluate the HOF once per exploded element.
+
+    With ``group`` (an int column numbering independent instances
+    0..G−1, e.g. the PQ subspaces), ``cents`` holds one centroid list
+    per instance, each point only sees its own instance's centroids, and
+    the moments are keyed by ``(group, cluster, d)`` — G Lloyd runs for
+    the jobs of one.
+    """
+    keys = [group] if group else []
+    groups = cents if group else [cents]
+    for _ in range(n_rounds):
+        # narrow (cluster, d) moments: a wide per-dimension-column
+        # aggregate measured 2x slower at dim=64 (codegen cost per round)
+        rows = (
+            pts.select(*keys, "__q", _nearest(cents, group).alias("__cluster"))
+            .select(*keys, "__cluster", F.posexplode("__q").alias("__d", "__x"))
+            .groupBy(*keys, "__cluster", "__d")
+            .agg(
+                F.sum("__x").alias("__s"),
+                F.count(F.lit(1)).cast("long").alias("__n"),
+            )
+            .collect()
+        )
+        moments = {
+            (r[group] if group else 0, r["__cluster"], r["__d"]): (
+                None if r["__s"] is None else r["__s"] // r["__n"]
+            )
+            for r in rows
+        }
+        members = {(g, j) for g, j, _ in moments}
+        groups = [
+            [
+                [moments.get((g, j, d)) for d in range(len(c))]
+                if (g, j) in members and c is not None
+                else c
+                for j, c in enumerate(gc)
+            ]
+            for g, gc in enumerate(groups)
+        ]
+        cents = groups if group else groups[0]
+    return cents
+
+
+def _nearest(cents: list, group: str | None = None) -> F.Column:
+    """Index of the centroid nearest ``__q`` by INTEGER squared L2
+    distance, the centroids inlined as one constant-folded literal (per
+    ``group`` value when grouped, see `_lloyd_rounds`). Ties go to the
+    smaller index (the (d, j) struct minimum); a NULL distance (NULL
+    vector / component, ragged width) sorts first."""
+    lit = (
+        _centroid_literal(cents)
+        if group is None
+        else f"element_at(array({', '.join(map(_centroid_literal, cents))}), {group} + 1)"
+    )
+    return F.expr(
+        f"array_min(transform({lit}, s -> named_struct("
+        "'d', aggregate(zip_with(__q, s.c, (a, b) -> (a - b) * (a - b)),"
+        " 0L, (acc, v) -> acc + v), 'j', s.j)))"
+    )["j"]
+
+
 def _centroid_literal(cents: list) -> str:
     """SQL literal ``array<struct<j int, c array<bigint>>>`` of driver-side
     centroids (index j = list position); Spark constant-folds it."""
@@ -274,6 +317,22 @@ def _centroid_literal(cents: list) -> str:
 
     body = ", ".join(f"struct({j}, {arr(c)})" for j, c in enumerate(cents))
     return f"CAST(array({body}) AS ARRAY<STRUCT<j: INT, c: ARRAY<BIGINT>>>)"
+
+
+def _spark_round(x: float, dp: int) -> float:
+    """Spark's ``round(x, dp)`` of a double, on the driver: HALF_UP on
+    the double's shortest decimal string. Python's ``round`` rounds the
+    binary value half-even instead (0.1234567890125 → 0.123456789012,
+    where Spark gives 0.123456789013). NaN and ±inf pass through; a
+    zero result is +0.0, as Spark's BigDecimal has no negative zero.
+    The driver-side loops of the small iterative trainers resync with
+    this, so their per-step rounding is the one the plan applied."""
+    if not math.isfinite(x):
+        return x
+    exact = Decimal(repr(x)).quantize(
+        Decimal(1).scaleb(-dp), ROUND_HALF_UP, Context(prec=400)
+    )
+    return float(exact) + 0.0
 
 
 def pca_reduce(df: DataFrame, vec_col: str, k: int = 10, out_col: str = "pca") -> DataFrame:
@@ -714,8 +773,6 @@ def dbscan_labels(
 def _rint_away(y: float) -> int:
     """round-half-away-from-zero to int — the DuckDB/Spark ``round()``
     tie rule, reproduced for driver-side math that must match SQL."""
-    import math
-
     return int(math.floor(y + 0.5)) if y >= 0 else -int(math.floor(-y + 0.5))
 
 

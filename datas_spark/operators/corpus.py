@@ -944,16 +944,20 @@ def logreg_gd_train(
       integer floor division (``(s − pmod(s,n)) div n``), N = doc
       count.
 
-    Plan shape (the Lloyd map-only-assignment idiom): weights live in
-    ONE packed broadcast row (``num_features``+1 longs) — the residual
-    pass is a map-only fold over each doc's sparse count array, NEVER
-    a docs×features shuffle; the gradient is one combinable
-    explode → per-bucket aggregate (≤``num_features``+1 rows out); the
-    doc count is a 1-row frame crossJoined into the update, so the
-    whole ``n_steps``-deep plan is lazy with ZERO driver collects or
-    pre-plan probe jobs. Per-doc frames pin via lazy localCheckpoint
-    so lineage stays flat across steps. At 10⁹ rows each step is one
-    scan + one F-row aggregate — full-batch GD's lower bound.
+    Plan shape (the `kmeans_lloyd` idiom): the ``num_features``+1
+    integer weights live on the DRIVER and enter each step's plan as one
+    constant-folded array literal. The residual pass is a map-only fold
+    over each doc's sparse count array (the sigmoid stays in the plan,
+    so the JVM's ``exp`` produces the bits), NEVER a docs×features
+    shuffle; the gradient is one combinable explode → per-bucket
+    aggregate of at most ``num_features``+1 rows, collected, and the
+    driver applies the exact floor update. N is the row count of the
+    intercept bucket ``b = −1`` in that same aggregate (every doc holds
+    one sentinel), so no step needs a separate count job. Per call: two
+    jobs per step; the per-doc frame pins via lazy localCheckpoint so
+    every step rescans it, not ``df``. At 10⁹ rows each step is one
+    scan + one F-row aggregate — full-batch GD's lower bound. An empty
+    ``df`` leaves every weight at its init 0.
 
     Returns the same broadcastable model shape as
     `quality_classifier_train`: ``(feature int, weight double)`` with
@@ -1011,18 +1015,13 @@ def logreg_gd_train(
         )
         .localCheckpoint(eager=False)
     )
-    ncnt = feats.agg(F.count(F.lit(1)).cast("long").alias("__n"))
-    packed = feats.sparkSession.range(1).select(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(num_features)),
-            lambda i: F.lit(0).cast("long"),
-        ).alias("__w")  # index 1 = intercept (b=-1), index b+2 = bucket b
-    )
+    w = [0] * (num_features + 1)  # index 0 = intercept (b=-1), b+1 = bucket b
     for _ in range(n_steps):
+        wlit = F.expr(f"array({', '.join(f'{x}L' for x in w)})")
         zq = F.aggregate(
             F.col("__arr"),
             F.lit(0).cast("long"),
-            lambda acc, s: acc + F.element_at(F.col("__w"), s["b"] + 2) * s["c"],
+            lambda acc, s: acc + F.element_at(wlit, s["b"] + 2) * s["c"],
         )
         z = zq.cast("double") / F.lit(float(scale))
         p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
@@ -1030,46 +1029,23 @@ def logreg_gd_train(
             F.round((p - F.col("__y").cast("double")) * F.lit(float(scale)), 0)
             .cast("long")
         )
-        resid = feats.crossJoin(broadcast(packed)).select(
-            "__arr", rq.alias("__rq")
-        )
         grads = (
-            resid.select(F.explode("__arr").alias("__s"), "__rq")
-            .select(
-                F.col("__s")["b"].alias("__b"),
-                (F.col("__s")["c"] * F.col("__rq")).alias("__g"),
-            )
-            .groupBy("__b")
-            .agg(F.sum("__g").alias("__gsum"))
-        )
-        prev = packed.select(F.posexplode("__w").alias("__i", "__wq")).select(
-            (F.col("__i") - 1).cast("int").alias("__b"), "__wq"
-        )
-        packed = (
-            prev.join(grads, "__b", "left")
-            .crossJoin(broadcast(ncnt))
-            .select(
-                "__b",
-                (
-                    F.col("__wq")
-                    - F.expr(
-                        f"(({lr_num}L * coalesce(__gsum, 0L)) "
-                        f"- pmod({lr_num}L * coalesce(__gsum, 0L), {lr_den}L * __n)) "
-                        f"div ({lr_den}L * __n)"
-                    )
-                ).alias("__wq"),
-            )
+            feats.select("__arr", rq.alias("__rq"))
+            .select(F.explode("__arr").alias("__s"), "__rq")
+            .groupBy(F.col("__s")["b"].alias("__b"))
             .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("__b", "__wq"))),
-                    lambda s: s["__wq"],
-                ).alias("__w")
+                F.sum(F.col("__s")["c"] * F.col("__rq")).alias("__g"),
+                F.count(F.lit(1)).alias("__n"),
             )
-            .localCheckpoint(eager=False)
+            .collect()
         )
-    return packed.select(F.posexplode("__w").alias("__i", "__wq")).select(
-        (F.col("__i") - 1).cast("int").alias("feature"),
-        (F.col("__wq").cast("double") / F.lit(float(scale))).alias("weight"),
+        g = {r["__b"]: r["__g"] or 0 for r in grads}  # an all-NULL-label sum is 0
+        n = next((r["__n"] for r in grads if r["__b"] == -1), 0)
+        if n:
+            w = [x - lr_num * g.get(b, 0) // (lr_den * n) for b, x in enumerate(w, -1)]
+    return feats.sparkSession.createDataFrame(
+        [(b, x / float(scale)) for b, x in enumerate(w, -1)],
+        "feature int, weight double",
     )
 
 
@@ -2090,7 +2066,7 @@ def doremi_domain_weights_k(
     step_size: float = 1.0,
     smoothing: float = 0.01,
 ) -> DataFrame:
-    """``n_steps`` unrolled DoReMi exponentiated-gradient steps
+    """``n_steps`` DoReMi exponentiated-gradient steps
     (VERDICT r7 #6) — the published method iterates; the round-7 query
     was one step. Per step t (Xie et al. 2023, with the per-domain
     excess loss fixed between steps — retraining the proxy model is
@@ -2106,19 +2082,27 @@ def doremi_domain_weights_k(
     sampled — the weights converge monotonically to the smoothed
     near-one-hot fixed point (property-tested on a planted skew).
 
-    Scale shape — the BPE-unroll pattern: examples are touched by ONE
-    map-side-combinable aggregate; the k-row domain frame is then
-    packed into a SINGLE row (array_sort'd struct list, so every fold
-    runs in deterministic domain order on both engines) and all
-    ``n_steps`` updates run as chained 1-row projections — each step
-    its own select, so Catalyst keeps them as separate cheap Projects
-    instead of exponentially inlining the step expression. Per-step
-    rounding to 12 dp stops last-ulp ``exp`` divergence between
-    JVM and C libm from compounding across steps while leaving the
-    6-dp output exact.
+    Scale shape — the `kmeans_lloyd` driver-state idiom: examples are
+    touched by ONE map-side-combinable aggregate whose k domain rows
+    are collected together with each domain's step factor
+    ``exp(η · λ_i)`` — the only libm call, which does not change across
+    steps, so it is computed in the plan and the JVM produces its bits.
+    The ``n_steps`` updates then run as a plain driver loop in
+    ascending domain order (NULL first, the oracle's fold order), with
+    only ``*``, ``/`` and ``+`` and the per-step Spark-rounding to 12 dp
+    (`clustering._spark_round`), which keeps last-ulp ``exp``
+    divergence between the JVM and C libm from compounding across steps
+    while leaving the 6-dp output exact.
 
     Returns ``(domain, n_docs, excess_loss, weight)`` like the
-    single-step operator."""
+    single-step operator, as a driver-built frame with the input's
+    domain type; an empty input returns no rows."""
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    from datas_spark.operators.clustering import _spark_round
+
+    eta = float(step_size)
+    c = float(smoothing)
     per_dom = df.groupBy(F.col(domain_col).alias("domain")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.round(
@@ -2133,58 +2117,32 @@ def doremi_domain_weights_k(
             9,
         ).alias("excess_loss"),
     )
-    eta = float(step_size)
-    c = float(smoothing)
-    row = per_dom.agg(
-        F.array_sort(
-            F.collect_list(F.struct("domain", "n_docs", "excess_loss"))
-        ).alias("__d")
+    doms = sorted(
+        per_dom.withColumn("__e", F.exp(F.lit(eta) * F.col("excess_loss"))).collect(),
+        key=lambda r: (r["domain"] is not None, r["domain"]),
     )
-    row = row.select(
-        "__d",
-        F.transform(
-            "__d", lambda d: F.lit(1.0) / F.size("__d").cast("double")
-        ).alias("__w"),
-    )
+    w = [1.0 / len(doms) for _ in doms]
     for _ in range(int(n_steps)):
-        row = row.select(
-            "__d",
-            F.zip_with(
-                "__w",
-                "__d",
-                lambda w, d: w * F.exp(F.lit(eta) * d["excess_loss"]),
-            ).alias("__r"),
-        )
-        row = row.select(
-            "__d",
-            "__r",
-            F.aggregate("__r", F.lit(0.0), lambda acc, x: acc + x).alias("__z"),
-        )
-        row = row.select(
-            "__d",
-            F.transform(
-                "__r",
-                lambda r: F.round(
-                    F.lit(1.0 - c) * r / F.col("__z")
-                    + F.lit(c) / F.size("__d").cast("double"),
-                    12,
-                ),
-            ).alias("__w"),
-        )
-    return row.select(
-        F.explode(
-            F.zip_with(
-                "__d",
-                "__w",
-                lambda d, w: F.struct(
-                    d["domain"].alias("domain"),
-                    d["n_docs"].alias("n_docs"),
-                    d["excess_loss"].alias("excess_loss"),
-                    F.round(w, 6).alias("weight"),
-                ),
-            )
-        ).alias("__o")
-    ).select("__o.*")
+        r = [wi * d["__e"] for wi, d in zip(w, doms)]
+        z = 0.0
+        for x in r:  # the oracle's left fold; sum() compensates from 3.12
+            z += x
+        w = [_spark_round((1.0 - c) * x / z + c / len(doms), 12) for x in r]
+    schema = StructType(
+        [
+            StructField("domain", per_dom.schema["domain"].dataType),
+            StructField("n_docs", LongType()),
+            StructField("excess_loss", DoubleType()),
+            StructField("weight", DoubleType()),
+        ]
+    )
+    return df.sparkSession.createDataFrame(
+        [
+            (d["domain"], d["n_docs"], d["excess_loss"], _spark_round(wi, 6))
+            for d, wi in zip(doms, w)
+        ],
+        schema,
+    )
 
 
 def doremi_domain_weights(

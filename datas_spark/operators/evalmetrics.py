@@ -480,7 +480,7 @@ def bt_rating_k(
     natural consumer of the engine's ``preference_pairs`` shape (the
     reference's reward scores exist to rank competing outputs,
     ``score_pipeline_rw.py``; this turns those rankings into per-model
-    strengths). ``n_steps`` unrolled minorization-maximization updates
+    strengths). ``n_steps`` minorization-maximization updates
     (Hunter 2004, "MM algorithms for generalized Bradley-Terry
     models"):
 
@@ -490,183 +490,73 @@ def bt_rating_k(
     between i and j. Items that never win converge to rating 0 (the
     standard MM caveat); ties must be excluded upstream.
 
-    Scale shape — the DoReMi/BPE unroll pattern: comparisons are
-    touched by ONE combinable (winner, loser) count aggregate; the
-    ≤k²-row pair frame is packed into a single row (array_sort'd
-    struct list → deterministic fold order on both engines), the win
-    vector and the flat k×k game matrix are built as 1-row array
-    projections, and every MM step is its own chained 1-row select.
-    Only +,/ arithmetic — no libm calls — so every intermediate double
-    is bit-identical across engines; per-step rounding to 12 dp is
-    belt-and-braces against future expression reassociation.
+    Scale shape — the `kmeans_lloyd` driver-state idiom: comparisons
+    are touched by ONE combinable (winner, loser) count aggregate whose
+    ≤k² rows are collected; the win vector, the k×k game matrix and
+    every MM step then run as a plain driver loop over the items in
+    ascending order (the oracle's fold order). Only +,/ arithmetic — no
+    libm calls — so every intermediate double is bit-identical across
+    engines; the per-step 12-dp Spark-rounding (`clustering.
+    _spark_round`) is belt-and-braces against future expression
+    reassociation. A pair with a NULL side is no game; a win over a
+    NULL loser still counts in ``n_wins``.
 
-    Returns ``(item, n_wins, n_games, rating)``, rating rounded to 6.
+    Returns ``(item, n_wins, n_games, rating)``, rating rounded to 6, as
+    a driver-built frame with the input's item type; no comparisons
+    return no rows.
     """
-    wins = comparisons.groupBy(
-        F.col(winner_col).alias("__wi"), F.col(loser_col).alias("__li")
-    ).agg(F.count(F.lit(1)).cast("double").alias("__c"))
-    items = (
-        wins.select(F.col("__wi").alias("__it"))
-        .unionByName(wins.select(F.col("__li").alias("__it")))
-        .distinct()
-        .agg(F.array_sort(F.collect_list("__it")).alias("__items"))
-    )
-    packed = wins.agg(
-        F.array_sort(F.collect_list(F.struct("__wi", "__li", "__c"))).alias(
-            "__pairs"
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    from datas_spark.operators.clustering import _spark_round
+
+    pairs = (
+        comparisons.groupBy(
+            F.col(winner_col).alias("__wi"), F.col(loser_col).alias("__li")
         )
+        .agg(F.count(F.lit(1)).cast("double").alias("__c"))
+        .collect()
     )
-    # two 1-row aggregates cross: the documented literal-sized BNLJ;
-    # an empty comparison frame yields an empty item list — drop the
-    # row so no downstream sequence(0, k-1) reverses on k = 0
-    row = items.crossJoin(F.broadcast(packed)).where(
-        F.size("__items") > 0
-    )
-    # 0-based item indexes into the sorted item list
-    row = row.select(
-        "__items",
-        F.transform(
-            "__pairs",
-            lambda s: F.struct(
-                (F.array_position("__items", s["__wi"]) - 1)
-                .cast("int")
-                .alias("wi"),
-                (F.array_position("__items", s["__li"]) - 1)
-                .cast("int")
-                .alias("li"),
-                s["__c"].alias("c"),
-            ),
-        ).alias("__pairs"),
-    )
-    k = F.size("__items")
-    idx = F.sequence(F.lit(0), k - 1)
-    # W[i] = wins of i; N[i*k+j] = games between i and j (symmetric)
-    row = row.select(
-        "__items",
-        F.transform(
-            idx,
-            lambda i: F.aggregate(
-                "__pairs",
-                F.lit(0.0),
-                lambda a, s: a
-                + F.when(s["wi"] == i, s["c"]).otherwise(F.lit(0.0)),
-            ),
-        ).alias("__W"),
-        F.transform(
-            F.sequence(F.lit(0), k * k - 1),
-            lambda x: F.aggregate(
-                "__pairs",
-                F.lit(0.0),
-                lambda a, s: a
-                + F.when(
-                    (s["wi"] == F.floor(x / k).cast("int"))
-                    & (s["li"] == (x % k).cast("int")),
-                    s["c"],
-                )
-                .when(
-                    (s["li"] == F.floor(x / k).cast("int"))
-                    & (s["wi"] == (x % k).cast("int")),
-                    s["c"],
-                )
-                .otherwise(F.lit(0.0)),
-            ),
-        ).alias("__N"),
-        F.transform(idx, lambda i: F.lit(1.0) / k.cast("double")).alias(
-            "__p"
-        ),
-    )
+    items = sorted({x for r in pairs for x in (r["__wi"], r["__li"]) if x is not None})
+    k = len(items)
+    at = {it: i for i, it in enumerate(items)}
+    # W[i] = wins of i; N[i][j] = games between i and j (symmetric)
+    W = [0.0] * k
+    N = [[0.0] * k for _ in range(k)]
+    for wi, li, c in pairs:
+        if wi is not None:
+            W[at[wi]] += c
+        if wi is not None and li is not None:
+            i, j = at[wi], at[li]
+            N[i][j] += c
+            if i != j:
+                N[j][i] += c
+    p = [1.0 / k for _ in items]
     for _ in range(int(n_steps)):
         # denom_i = sum_j N[i,j] / (p_i + p_j); p'_i = W_i / denom_i
-        row = row.select(
-            "__items",
-            "__W",
-            "__N",
-            "__p",
-            F.transform(
-                F.sequence(F.lit(0), F.size("__items") - 1),
-                lambda i: F.aggregate(
-                    F.sequence(F.lit(0), F.size("__items") - 1),
-                    F.lit(0.0),
-                    lambda a, j: a
-                    + F.when(
-                        (j != i)
-                        & (
-                            F.element_at(
-                                "__N", (i * F.size("__items") + j + 1).cast("int")
-                            )
-                            > 0.0
-                        ),
-                        F.element_at(
-                            "__N", (i * F.size("__items") + j + 1).cast("int")
-                        )
-                        / (
-                            F.element_at("__p", (i + 1).cast("int"))
-                            + F.element_at("__p", (j + 1).cast("int"))
-                        ),
-                    ).otherwise(F.lit(0.0)),
-                ),
-            ).alias("__den"),
-        )
-        row = row.select(
-            "__items",
-            "__W",
-            "__N",
-            F.zip_with(
-                "__W",
-                F.arrays_zip("__den", "__p"),
-                lambda w, dp: F.when(
-                    dp["__den"] > 0.0, w / dp["__den"]
-                ).otherwise(dp["__p"]),
-            ).alias("__r"),
-        )
-        row = row.select(
-            "__items",
-            "__W",
-            "__N",
-            "__r",
-            F.aggregate("__r", F.lit(0.0), lambda a, x: a + x).alias("__z"),
-        )
-        row = row.select(
-            "__items",
-            "__W",
-            "__N",
-            F.transform(
-                "__r",
-                lambda r: F.round(
-                    F.when(F.col("__z") > 0.0, r / F.col("__z")).otherwise(r),
-                    12,
-                ),
-            ).alias("__p"),
-        )
-    out = row.select(
-        F.explode(
-            F.zip_with(
-                F.arrays_zip("__items", "__W"),
-                F.arrays_zip(
-                    "__p",
-                    F.transform(
-                        F.sequence(F.lit(0), F.size("__items") - 1),
-                        lambda i: F.aggregate(
-                            F.sequence(F.lit(0), F.size("__items") - 1),
-                            F.lit(0.0),
-                            lambda a, j: a
-                            + F.element_at(
-                                "__N",
-                                (i * F.size("__items") + j + 1).cast("int"),
-                            ),
-                        ),
-                    ),
-                ),
-                lambda iw, pg: F.struct(
-                    iw["__items"].alias("item"),
-                    iw["__W"].cast("long").alias("n_wins"),
-                    pg["1"].cast("long").alias("n_games"),
-                    F.round(pg["__p"], 6).alias("rating"),
-                ),
-            )
-        ).alias("__o")
+        r = []
+        for i in range(k):
+            den = 0.0
+            for j in range(k):
+                den += N[i][j] / (p[i] + p[j]) if j != i and N[i][j] > 0.0 else 0.0
+            r.append(W[i] / den if den > 0.0 else p[i])
+        z = 0.0
+        for x in r:  # the oracle's left fold; sum() compensates from 3.12
+            z += x
+        p = [_spark_round(x / z if z > 0.0 else x, 12) for x in r]
+    # counts are integer-valued doubles, so their sums are exact
+    out = [
+        (it, int(W[i]), int(sum(N[i])), _spark_round(p[i], 6))
+        for i, it in enumerate(items)
+    ]
+    schema = StructType(
+        [
+            StructField("item", comparisons.schema[winner_col].dataType),
+            StructField("n_wins", LongType()),
+            StructField("n_games", LongType()),
+            StructField("rating", DoubleType()),
+        ]
     )
-    return out.select("__o.*")
+    return comparisons.sparkSession.createDataFrame(out, schema)
 
 
 def pass_at_k(

@@ -924,161 +924,70 @@ def pq_codebooks_lloyd(
     """Lloyd-learned PQ codebooks — what real FAISS ``index_factory``
     training does (per-subspace k-means), replacing the fixed-sample
     codebooks of `pq_topk_fixed`, and hash-checkable because each
-    subspace trains with the deterministic unrolled Lloyd trainer
-    (`clustering.kmeans_lloyd`: e6-integer distances, (md5(id), id)
-    init, exact-integer centroid updates).
+    subspace trains exactly like `clustering.kmeans_lloyd` over its
+    slice (e6-integer distances, (md5(id), id) init, exact-integer
+    centroid updates, the same NULL rules).
 
     The ``m`` per-subspace Lloyd instances share the IDENTICAL seed
-    election (the ``(md5(id), id)`` draw never sees the slice), so all
-    ``m`` chains run as ONE grouped chain keyed by subspace ``__g``
-    (round-11, guide §2.4 "remove shuffles outright"): points live as
-    ``(id, g, subvector)`` rows, all m·ks centroids in one packed
-    broadcast row, and each round is ONE map-only assignment pass plus
-    ONE combinable ``groupBy(g, code)`` aggregate with per-dimension
-    long sums — versus the previous m independent `kmeans_lloyd`
-    chains (m × (assignment + 2-exchange update + merge) per round,
-    measured m× the job count for byte-identical centroids). Every
-    step replays the same exact integer arithmetic per subspace, so
-    the oracle CTEs are unchanged. ``dim`` is an explicit parameter so
-    composing this into a pipeline triggers no pre-plan width probe.
+    election (the ``(md5(id), id)`` draw never sees the slice, and
+    quantize-then-slice equals slice-then-quantize), so the seeds are
+    drawn once and sliced per subspace on the driver, and all ``m``
+    instances run as ONE grouped instance of the Lloyd core
+    (`clustering._lloyd_rounds`) keyed by subspace ``__g``: points
+    live as ``(g, subvector)`` rows, each round is one map-only
+    assignment pass plus one collected ``(g, code, d)`` moment
+    aggregate of at most ks·dim rows, and the m·ks centroids stay on
+    the driver. ``dim`` is an explicit parameter so composing this into
+    a pipeline triggers no pre-plan width probe. Per call: one seed
+    collect and two jobs per round.
+
     Returns the pre-split codebook frame ``(__j int, __code int,
     __cb array<double>, __n2 double)`` that `_pq_encode_presplit` /
-    `_pq_lut_presplit` broadcast — contractually tiny (m·ks rows).
+    `_pq_lut_presplit` broadcast — contractually tiny (m·ks rows,
+    built from one literal, so re-reading it runs no job).
     """
-    from datas_spark.operators.clustering import DEFAULT_SCALE, _quantized
+    from datas_spark.operators.clustering import (
+        DEFAULT_SCALE,
+        _centroid_literal,
+        _lloyd_rounds,
+        _lloyd_seeds,
+        _quantized,
+    )
 
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
     scale = DEFAULT_SCALE  # shared with kmeans_lloyd (ADVICE r11)
     pts = train.select(
-        F.col(id_col).alias("__tid"),
-        _quantized(vec_col, scale).alias("__qf"),
+        F.col(id_col).alias("__id"), _quantized(vec_col, scale).alias("__q")
     ).localCheckpoint(eager=False)
-    # one seed election for all m chains: quantize-then-slice equals
-    # slice-then-quantize (elementwise round), and the (h, id) sort key
-    # is slice-independent, so subspace j's seeds are exactly what its
-    # standalone chain would have drawn
-    seeds = (
-        pts.select(
-            F.md5(F.col("__tid").cast("string")).alias("__h"), "__tid", "__qf"
-        )
-        .orderBy(F.col("__h").asc(), F.col("__tid").asc())
-        .limit(ks)
-    )
-    packed = (
-        seeds.agg(
-            F.array_sort(
-                F.collect_list(F.struct("__h", "__tid", "__qf"))
-            ).alias("__raw")
-        )
-        .select(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda g: F.transform(
-                        F.col("__raw"),
-                        lambda s, i: F.struct(
-                            g.cast("int").alias("g"),
-                            i.cast("int").alias("j"),
-                            F.slice(s["__qf"], g * sub + 1, F.lit(sub)).alias(
-                                "c"
-                            ),
-                        ),
-                    ),
-                )
-            ).alias("__cents")
-        )
-        .localCheckpoint(eager=False)
-    )
+    seeds = _lloyd_seeds(pts, ks)
     rows = pts.select(
-        "__tid",
         F.posexplode(
-            F.array(*[F.slice("__qf", g * sub + 1, sub) for g in range(m)])
-        ).alias("__g", "__q"),
+            F.array(*[F.slice("__q", g * sub + 1, sub) for g in range(m)])
+        ).alias("__g", "__q")
     ).localCheckpoint(eager=False)
-
-    def _assign(cents_frame: DataFrame) -> DataFrame:
-        def d2(cvec):
-            return F.aggregate(
-                F.zip_with(F.col("__q"), cvec, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            )
-
-        best = F.array_min(
+    cents = _lloyd_rounds(
+        rows,
+        [[None if q is None else q[g * sub : (g + 1) * sub] for q in seeds] for g in range(m)],
+        n_rounds,
+        group="__g",
+    )
+    books = f"array({', '.join(map(_centroid_literal, cents))})"
+    out = (
+        train.sparkSession.range(1)
+        .select(F.posexplode(F.expr(books)).alias("__j", "__book"))
+        .select("__j", F.explode("__book").alias("__e"))
+        .select(
+            "__j",
+            F.col("__e.j").alias("__code"),
             F.transform(
-                F.filter(F.col("__cents"), lambda e: e["g"] == F.col("__g")),
-                lambda s: F.struct(d2(s["c"]).alias("d"), s["j"].alias("j")),
-            )
+                F.col("__e.c"), lambda x: x.cast("double") / F.lit(float(scale))
+            ).alias("__cb"),
         )
-        return rows.crossJoin(broadcast(cents_frame)).select(
-            "__tid", "__g", "__q", best["j"].alias("__cluster")
-        )
-
-    for _ in range(n_rounds):
-        assigned = _assign(packed)
-        sums = assigned.groupBy("__g", "__cluster").agg(
-            F.count(F.lit(1)).cast("long").alias("__n"),
-            *[
-                F.sum(F.element_at("__q", i + 1)).alias(f"__s{i}")
-                for i in range(sub)
-            ],
-        )
-        newc = sums.select(
-            "__g",
-            "__cluster",
-            F.array(
-                *[
-                    F.expr(f"(__s{i} - pmod(__s{i}, __n)) div __n")
-                    for i in range(sub)
-                ]
-            ).alias("__cnew"),
-        )
-        newrow = newc.agg(
-            F.collect_list(
-                F.struct(
-                    F.col("__g").alias("g"),
-                    F.col("__cluster").alias("j"),
-                    F.col("__cnew").alias("c"),
-                )
-            ).alias("__new")
-        )
-        packed = (
-            packed.crossJoin(broadcast(newrow))
-            .select(
-                F.transform(
-                    "__cents",
-                    lambda p: F.struct(
-                        p["g"].alias("g"),
-                        p["j"].alias("j"),
-                        F.coalesce(
-                            F.get(
-                                F.filter(
-                                    F.col("__new"),
-                                    lambda x: (x["g"] == p["g"])
-                                    & (x["j"] == p["j"]),
-                                ),
-                                0,
-                            )["c"],
-                            p["c"],
-                        ).alias("c"),
-                    ),
-                ).alias("__cents")
-            )
-            .localCheckpoint(eager=False)
-        )
-
-    out = packed.select(F.explode("__cents").alias("__e")).select(
-        F.col("__e.g").cast("int").alias("__j"),
-        F.col("__e.j").cast("int").alias("__code"),
-        F.transform(
-            F.col("__e.c"), lambda x: x.cast("double") / F.lit(float(scale))
-        ).alias("__cb"),
     )
     n2 = F.aggregate(F.col("__cb"), F.lit(0.0), lambda acc, x: acc + x * x)
-    # m·ks rows — pin once, every consumer broadcasts this frame
-    return out.withColumn("__n2", n2).localCheckpoint(eager=False)
+    return out.withColumn("__n2", n2)
 
 
 def pq_topk_learned(
@@ -1514,14 +1423,6 @@ def ann_recall_report(
             F.round(F.col("n_hits") / F.col("n_exact"), 6) + F.lit(0.0),
         )
     )
-
-
-def ivf_index_write(
-    assigned: DataFrame, path: str
-) -> None:
-    """Persist an IVF index (``__did``, ``__dv``, ``__cell``) partitioned
-    by cell so query-time probes become partition-pruned scans."""
-    assigned.write.mode("overwrite").partitionBy("__cell").parquet(path)
 
 
 def ivf_index_upsert(

@@ -2829,9 +2829,9 @@ def q_doremi_weights_k5(spark: SparkSession, sf_dir: str) -> DataFrame:
     VERDICT r7 #6) over the same self-trained unigram/bigram loss pair
     as the single-step query: mass compounds onto the max-excess source
     each step while the 1% uniform floor keeps every source sampled.
-    Examples are touched ONCE; the five updates run as chained 1-row
-    projections over the packed domain array (the BPE-unroll pattern),
-    each step's fold in deterministic domain order on both engines."""
+    Examples are touched ONCE; the k domain rows (with their in-plan
+    ``exp`` step factors) are collected and the five updates run as a
+    driver loop, each step's fold in the oracle's domain order."""
     docs = read_table(spark, sf_dir, "documents")
     uni = C.unigram_lm_score(docs, "doc_id", "text").select(
         "doc_id", F.col("nll").alias("__proxy")

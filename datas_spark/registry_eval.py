@@ -1330,9 +1330,8 @@ def q_bt_model_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-response fixture — the Chatbot-Arena-style leaderboard a
     preference dataset implies. Comparisons are a prompt-blocked
     self-join (equi-join on prompt_id, strict score inequality — ties
-    never count as games); the ≤k²-row win frame then packs into ONE
-    row and 5 MM steps run as chained 1-row projections, the
-    DoReMi/BPE unroll pattern."""
+    never count as games); the ≤k²-row win frame is then collected
+    and 5 MM steps run as a driver loop in the oracle's item order."""
     from datas_spark.operators.evalmetrics import bt_rating_k
 
     docs = read_table(spark, sf_dir, "documents")

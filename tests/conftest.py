@@ -50,6 +50,28 @@ def codegen_compiles(spark):
     return compiles
 
 
+@pytest.fixture
+def job_count(spark):
+    """``job_count(fn)`` runs ``fn()`` under a fresh Spark job group and
+    returns how many jobs it started — the per-call job budget of a
+    driver-led trainer."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"jobs-{uuid.uuid4()}"
+        sc.setJobGroup(group, "job count")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     # override to run data-parameterized suites (e.g. the plan sweep)

@@ -225,11 +225,9 @@ def test_kmeans_lloyd_empty_input(spark):
         assert labels == {} and cents == {}
 
 
-def test_kmeans_lloyd_job_count_per_call(spark):
+def test_kmeans_lloyd_job_count_per_call(spark, job_count):
     """Each round is one collected moment aggregate: an int-k call runs
     at most 2 jobs per round plus the seed pick."""
-    import uuid
-
     from datas_spark.operators.clustering import kmeans_lloyd
 
     df = spark.range(0, 400, 1, 4).select(
@@ -239,15 +237,31 @@ def test_kmeans_lloyd_job_count_per_call(spark):
             ((F.col("id") % 5) / 10).cast("double"),
         ).alias("v"),
     )
-    sc = spark.sparkContext
-    group = f"lloyd-{uuid.uuid4()}"
-    sc.setJobGroup(group, "kmeans_lloyd job count")
-    try:
-        kmeans_lloyd(df, "id", "v", k=5, n_rounds=3)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2 * 3 + 2
+    assert job_count(lambda: kmeans_lloyd(df, "id", "v", k=5, n_rounds=3)) <= 2 * 3 + 2
+
+
+def test_spark_round_is_half_up_on_the_decimal_string(spark):
+    """The driver-side 12-dp resync rounds like Spark's ``round``: HALF_UP
+    on the double's decimal string, where Python's ``round`` rounds
+    these ties down; a zero result is +0.0."""
+    import math
+
+    from datas_spark.operators.clustering import _spark_round
+
+    ties = [0.1234567890125, 5e-13, 0.9999999999995]
+    assert [_spark_round(x, 12) for x in ties] == [0.123456789013, 1e-12, 1.0]
+    assert [round(x, 12) for x in ties] == [0.123456789012, 0.0, 0.999999999999]
+    xs = ties + [-0.1234567890125, -1e-15, -0.0, 2.5e-7, 1e20, 123.4565]
+    row = spark.createDataFrame([(x,) for x in xs], "x double").select(
+        F.collect_list(F.struct(F.col("x"), F.round("x", 12).alias("r12"),
+                                F.round("x", 3).alias("r3")))
+    ).first()[0]
+    for r in row:
+        assert _spark_round(r["x"], 12) == r["r12"], r
+        assert _spark_round(r["x"], 3) == r["r3"], r
+        assert math.copysign(1.0, _spark_round(r["x"], 12)) == math.copysign(1.0, r["r12"])
+    assert math.isnan(_spark_round(float("nan"), 12))
+    assert _spark_round(float("-inf"), 12) == float("-inf")
 
 
 # ---------------------------------------------------------------------------

@@ -885,6 +885,44 @@ def test_logreg_gd_train_matches_python_replay(spark):
     assert got == {b: wq / scale for b, wq in w.items()}
 
 
+def test_logreg_gd_train_edge_inputs(spark):
+    """No docs: every weight stays at its init 0 (N = 0 takes no step).
+    One doc: plain GD on that doc. Docs sharing an id merge into one
+    training row per (id, label) over the id's merged token counts —
+    pinned weights."""
+    schema = "doc_id: long, text: string, label: int"
+    docs = [(i, f"tok{i % 5} word{i % 3} alpha beta", i % 2) for i in range(12)]
+
+    def fit(rows):
+        return sorted(
+            tuple(r) for r in C.logreg_gd_train(
+                spark.createDataFrame(rows, schema), "doc_id", "text", "label",
+                num_features=8, n_steps=3,
+            ).collect()
+        )
+
+    assert fit([]) == [(b, 0.0) for b in range(-1, 8)]
+    assert fit(docs[:1]) == [
+        (-1, -0.37092), (0, 0.0), (1, 0.0), (2, 0.0), (3, -0.741841),
+        (4, -0.37092), (5, 0.0), (6, -0.37092), (7, 0.0),
+    ]
+    assert fit(docs + [(3, "other words here", 1)]) == [
+        (-1, -0.06451), (0, 0.0), (1, 0.086755), (2, 0.065185), (3, 0.107004),
+        (4, -0.087836), (5, -0.007305), (6, 0.01193), (7, 0.0),
+    ]
+
+
+def test_logreg_gd_train_job_count(spark, job_count):
+    """Each step is one collected gradient aggregate (N rides along as
+    the intercept bucket's row count): at most 2 jobs per step plus a
+    small constant."""
+    docs = _separable_docs(spark)
+    n = job_count(lambda: C.logreg_gd_train(
+        docs, "doc_id", "text", "label", num_features=32, n_steps=3
+    ).collect())
+    assert n <= 2 * 3 + 4
+
+
 def test_logreg_gd_train_validates_params(spark):
     import pytest as _pytest
 
@@ -966,6 +1004,31 @@ def test_doremi_weights_upweight_high_excess_and_sum_to_one(spark):
     assert abs(sum(r.weight for r in rows.values()) - 1.0) < 1e-5
     # smoothing floor: even a zero-excess domain keeps >= c/k
     assert rows["wiki"].weight >= 0.01 / 3
+
+
+def test_doremi_k_edge_inputs(spark):
+    """k-step DoReMi on edge inputs: no rows give no domains; one domain
+    takes all the weight; a NULL domain is a domain of its own (first
+    in fold order) and a NULL loss adds zero excess — pinned weights."""
+    schema = "src string, p double, r double"
+
+    def weights(rows):
+        return sorted(
+            map(tuple, C.doremi_domain_weights_k(
+                spark.createDataFrame(rows, schema), "src", "p", "r", n_steps=5
+            ).collect()),
+            key=lambda t: (t[0] is not None, t[0]),
+        )
+
+    assert weights([]) == []
+    assert weights([("a", 3.0, 1.0), ("a", 1.0, 2.0)]) == [("a", 2, 1.0, 1.0)]
+    assert weights([
+        ("a", 3.0, 1.0), ("a", 2.5, 2.0), ("b", 1.0, 0.5),
+        ("c", 4.0, 1.0), ("c", None, 1.0), (None, 2.0, 1.0),
+    ]) == [
+        (None, 1, 1.0, 0.064226), ("a", 2, 1.25, 0.210479),
+        ("b", 1, 0.5, 0.008925), ("c", 2, 1.5, 0.716371),
+    ]
 
 
 def test_doremi_null_losses_contribute_zero_excess(spark):

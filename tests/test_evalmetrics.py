@@ -563,3 +563,35 @@ def test_krippendorff_alpha_validates(spark):
     df = spark.createDataFrame([(1, "a")], ["u", "v"])
     with _pytest.raises(ValueError):
         EM.krippendorff_alpha(df, "u", "v", exact_scale=0)
+
+
+def test_bt_rating_edge_inputs(spark):
+    """No comparisons: no items. One item: all the rating. One game:
+    the loser decays to 0. A repeated comparison counts once per row; a
+    pair with a NULL side is no game, but a win over a NULL loser still
+    counts in n_wins — pinned ratings."""
+
+    def ratings(rows, schema="winner string, loser string"):
+        return sorted(
+            map(tuple, EM.bt_rating_k(
+                spark.createDataFrame(rows, schema), "winner", "loser", 5
+            ).collect())
+        )
+
+    assert ratings([]) == []
+    assert ratings([("a", "a"), ("a", "a")]) == [("a", 2, 2, 1.0)]
+    assert ratings([("a", "b")]) == [("a", 1, 1, 1.0), ("b", 0, 1, 0.0)]
+    rows = [("a", "b"), ("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"),
+            ("d", "a"), ("b", "a")]
+    assert ratings(rows) == [
+        ("a", 3, 6, 0.114681), ("b", 2, 4, 0.102747),
+        ("c", 1, 3, 0.057604), ("d", 1, 1, 0.724968),
+    ]
+    assert ratings(rows + [(None, "a"), ("e", None)]) == [
+        ("a", 3, 6, 0.102153), ("b", 2, 4, 0.091524), ("c", 1, 3, 0.051311),
+        ("d", 1, 1, 0.645776), ("e", 1, 0, 0.109235),
+    ]
+    # the item type is the input's
+    assert ratings([(1, 2), (2, 3), (3, 1), (1, 3)], "winner long, loser long") == [
+        (1, 2, 3, 0.477862), (2, 1, 2, 0.31534), (3, 1, 3, 0.206798),
+    ]

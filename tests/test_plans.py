@@ -117,22 +117,8 @@ def test_all_registered_queries_avoid_scale_antipatterns(spark, sf_dir):
     # centroid tables). Each entry documents which tiny frame crosses.
     bnlj_ok = {
         "events_asof_click_salted",   # 1-row lazy ts bounds
-        "stride_skew_sample",         # 1-row bounds (skew_resistant_rank)
-        "stratified_sample_skew",     # 1-row bounds
-        "row_range_select",           # 1-row bounds via with_row_id
-        "middle_band_select",         # per-cluster percentile cuts (tiny)
-        "band_gather",                # same cuts frame
-        "cosine_topk", "cosine_topk_vec",  # broadcast query set
-        "lsh_topk", "lsh_topk_multiprobe", "lsh_topk_fixed",  # query set
+        "cosine_topk",                     # broadcast query set
         "ivf_topk", "ivf_topk_learned",    # centroids + query set
-        "knn_label_vote",                  # broadcast query set
-        "embedding_centroid_shift",        # centroid frame
-        "ngram_contamination",             # broadcast n-gram blocklist
-        "curate_corpus", "curate_corpus_minhash",  # stage bounds frames
-        "curate_audit",                    # same stage frames + fate joins
-        "datas_full_pipeline", "datas_full_pipeline_deterministic",
-        "kcenter_sample",                  # per-round argmax row
-        "labeled_unlabeled_split",
         "near_dup_pagerank",               # 1-row node count (dangling mass)
         "standardize_embeddings",          # 1-row packed per-dim mu/sd
         "tfidf_top_terms",                 # 1-row corpus doc count (idf)
@@ -145,7 +131,6 @@ def test_all_registered_queries_avoid_scale_antipatterns(spark, sf_dir):
         "hybrid_search_rrf",               # BM25 constants + 1-row query vec
         "hard_negative_mining",            # broadcast anchor set
         "label_rebalance",                 # 1-row majority-count target
-        "top_revenue_supplier",            # 1-row max-revenue scalar
         "events_value_hist_quantiles",     # 3-row quantile-target literals
         "events_type_hour_chi2",           # 1-row grand-total scalar
         "revenue_concentration",           # 1-row percentile threshold
@@ -185,11 +170,8 @@ def test_all_registered_queries_avoid_scale_antipatterns(spark, sf_dir):
         "matryoshka_recall",               # two cosine_topk query-set broadcasts
         "lang_source_mi",                  # 1-row grand-total scalar
         "customer_t_closeness",            # 1-row quartile thresholds + grid×bucket scalars
-        "knn_shapley_pairs",               # broadcast 8-probe test set
-        "knn_shapley_values",              # same broadcast probe set
         "entity_resolution_eval",          # 1-row metrics agg × 1-row truth-count scalar
         "scd2_from_snapshots",             # key frame × broadcast TINY snapshot list (one row per export)
-        "scd2_snapshot_merge",             # same grid inside its full-fold history stage
         # round 7
         "unigram_lm_score",                # 1-row corpus token-total scalar
         "doremi_domain_weights",           # same total + 1-row (k, tot) normalization scalar
@@ -200,9 +182,6 @@ def test_all_registered_queries_avoid_scale_antipatterns(spark, sf_dir):
         "simhash_near_dup",                # 1-row lazy corpus count (auto bucket cap)
         "simhash_cap_agreement",           # 1-row Venn-count + hot-bucket scalars
         "experiment_cuped_readout",        # 1-row pooled-moment scalars (theta, mx)
-        "doremi_weights_k5",               # unigram/bigram LM corpus-total scalars (same as doremi_domain_weights)
-        "doremi_mixture_sample",           # same LM scalars feeding the budget table
-        "bt_model_ratings",                # 1-row packed item list x 1-row packed pair list
         "conformal_coverage_audit",        # 1-row ratio/k-rank/q-hat scalars
         "dsir_ess_report",                 # dsir's 1-row smoothing scalars (inherited subplan)
         "experiment_hte_segments",         # 1-row packed pooled/Q scalar frame
@@ -213,19 +192,14 @@ def test_all_registered_queries_avoid_scale_antipatterns(spark, sf_dir):
         "rm3_expanded_topk",               # QL corpus constants + 1-row softmax/weight scalars (both passes)
         "annotator_alpha",                 # 1-row coincidence scalars (n, D_o) x 1-row margin scalar
         # round 10
-        "datas_full_pipeline_mllib",       # the flagship's band-cuts frames (same as datas_full_pipeline)
         "ivf_topk_mllib",                  # centroids + query set (same as ivf_topk_learned)
         "maxsim_rerank_topk",              # BM25 1-row corpus constants (recall stage)
         "maxsim_recall_report",            # same constants + 1-row hit/total count scalars
         "rougeL_novel_instructions",       # 1-row packed broadcast instruction pool
         # round 11
-        "quality_classifier_train_exact",  # 1-row packed GD weight row per step + 1-row doc-count scalar
-        "pq_topk_learned",                 # packed Lloyd rows (4 sub-trainers) + broadcast LUT/query set
-        "ivfpq_topk_learned",              # same + packed coarse-cell Lloyd rows + probe frame
+        "pq_topk_learned",                 # broadcast per-query ADC LUTs + query set (the pq_topk shape)
+        "ivfpq_topk_learned",              # same LUTs + broadcast coarse-cell centroids + probe frame
         "pq_recall_learned_vs_fixed",      # both PQ chains' broadcast LUTs + cosine_topk query set
-        "pq_distortion_learned_vs_fixed",  # m*ks-row broadcast codebooks (both variants)
-        "curate_corpus_semantic",          # packed Lloyd centroid row + 1-row auto-k count (semdedup stage)
-        "curate_audit_semantic",           # same stage frames + fate joins
         "maxsim_recall_sampled",           # sample-local BM25 constants + 1-row hit/total scalars
         "data_constrained_mix",            # 1-row corpus-total budget + 1-row (small_sum, n_large) scalar — the unimax_source_allocation shape
     }

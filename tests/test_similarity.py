@@ -365,7 +365,7 @@ def test_ivf_index_upsert_equals_fresh_build(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from datas_spark.operators.similarity import ivf_index_upsert, ivf_index_write
+    from datas_spark.operators.similarity import ivf_index_upsert
 
     rows, df = _vecs(spark, n=60, dim=8, seed=21)
     cells = df.where("id < 4").selectExpr("id as cell", "v")
@@ -502,6 +502,76 @@ def test_pq_codebooks_lloyd_shape_and_determinism(spark):
              for r in SIM.pq_codebooks_lloyd(
                  df, "id", "v", dim=8, m=2, ks=4, n_rounds=2).collect()}
     assert {(r["__j"], r["__code"]): r["__cb"] for r in got} == again
+
+
+def _codebooks(cb):
+    return {(r["__j"], r["__code"]): r["__cb"] for r in cb.collect()}
+
+
+def _slice_lloyd(spark, rows, m, ks, n_rounds):
+    """Each subspace's codebook as a standalone `kmeans_lloyd` run over
+    that slice of the same rows."""
+    from datas_spark.operators.clustering import kmeans_lloyd
+
+    sub = len(next(v for _, v in rows if v is not None)) // m
+    out = {}
+    for j in range(m):
+        part = spark.createDataFrame(
+            [(i, None if v is None else v[j * sub:(j + 1) * sub]) for i, v in rows],
+            "id long, v array<double>",
+        )
+        _, cents = kmeans_lloyd(part, "id", "v", k=ks, n_rounds=n_rounds)
+        out.update({(j, r["cluster"]): r["centroid"] for r in cents.collect()})
+    return out
+
+
+@pytest.mark.parametrize(
+    "case", ["plain", "null_vector", "duplicated_id", "fewer_rows_than_ks", "empty"]
+)
+def test_pq_codebooks_lloyd_equals_per_slice_kmeans_lloyd(spark, case):
+    """Every subspace trains exactly like `kmeans_lloyd` over its slice,
+    NULL rules included: a NULL training vector adds no moments to any
+    subspace, so the codebooks equal those trained without it; copies
+    of one id are drawn in (md5(id), id, vector) order; fewer rows
+    than ks give one code per row; no rows give no codes."""
+    import hashlib
+
+    rows, _ = _vecs(spark, n=40, dim=8, seed=5)
+    # the first seed's id again, with a vector that sorts after the
+    # original in every slice: both copies are seeds 0 and 1
+    first = min((hashlib.md5(str(i).encode()).hexdigest(), i) for i, _ in rows)[1]
+    rows = {
+        "plain": rows,
+        "null_vector": rows + [(1000, None)],
+        "duplicated_id": rows + [(first, [2.0] * 8)],
+        "fewer_rows_than_ks": rows[:3],
+        "empty": [],
+    }[case]
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    got = _codebooks(SIM.pq_codebooks_lloyd(df, "id", "v", dim=8, m=2, ks=4, n_rounds=2))
+    if not rows:
+        assert got == {}
+        return
+    assert got == _slice_lloyd(spark, rows, m=2, ks=4, n_rounds=2)
+    if case == "null_vector":
+        plain = spark.createDataFrame(rows[:-1], "id long, v array<double>")
+        assert got == _codebooks(
+            SIM.pq_codebooks_lloyd(plain, "id", "v", dim=8, m=2, ks=4, n_rounds=2)
+        )
+    if case == "fewer_rows_than_ks":
+        assert len(got) == 2 * 3
+
+
+def test_pq_codebooks_lloyd_job_count(spark, sf_dir, job_count):
+    """One seed collect, then one assignment + one collected moment
+    aggregate per round for all m subspaces together."""
+    from datas_spark.io.sources import read_table
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    n = job_count(
+        lambda: SIM.pq_codebooks_lloyd(emb, "vec_id", "embedding", 64, m=4, ks=8, n_rounds=2)
+    )
+    assert n <= 2 * 2 + 2
 
 
 def test_pq_topk_learned_full_oversample_equals_exact(spark):

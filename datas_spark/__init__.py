@@ -19,7 +19,8 @@ Catalyst optimizes:
                    search, task-vector algebra, clustering
                    (SURVEY §2.4–2.7 + north-star extensions)
 - ``pipeline``   — scorer registry + pipeline runner (SURVEY §2.8)
-- ``streaming``  — Structured Streaming scoring over event streams
+- ``streaming``  — Structured Streaming sessions, enrichment and
+                   attribution joins over event streams
 
 Design stance (SURVEY §7): DataFrame-in/DataFrame-out transforms, no
 custom Catalyst rules, model calls behind a Scorer protocol with

@@ -1,5 +1,4 @@
 from datas_spark.io.sources import (  # noqa: F401
-    load_tables,
     read_json_auto,
     read_table,
     row_range,

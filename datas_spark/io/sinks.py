@@ -66,107 +66,3 @@ def parquet_cache(
     if recompute or not _cache_marker_exists(spark, path):
         df.write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
-
-
-def write_table(
-    df: DataFrame,
-    path: str,
-    file_format: str = "parquet",
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-    compression: str | None = None,
-) -> None:
-    """Format-generic table writer: parquet (default), orc (native in
-    Spark core — the other columnar container a lake migration meets),
-    json (JSONL), or csv. Partitioning and codec pass through; the
-    parquet default inherits the session codec (zstd/snappy per
-    deployment)."""
-    if file_format not in ("parquet", "orc", "json", "csv"):
-        raise ValueError(f"unsupported format: {file_format}")
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    if compression is not None:
-        w = w.option("compression", compression)
-    if file_format == "csv":
-        w = w.option("header", "true")
-    getattr(w, file_format)(path)
-
-
-def write_webdataset(
-    df: DataFrame,
-    path: str,
-    key_col: str,
-    payload_cols: list[str],
-    n_shards: int = 8,
-    size_col: str | None = None,
-) -> DataFrame:
-    """Export rows as WebDataset-style tar shards —
-    ``shard-%05d.tar`` each holding one ``{key}.{column}`` member per
-    payload column (string columns utf-8 encoded, binary columns raw):
-    the de-facto sequential-read format for multimodal training
-    loaders, which stream tars instead of seeking small files.
-
-    Sharding is deterministic: balanced by ``size_col`` through
-    `training.balanced_shards` (near-equal bytes per shard — loader
-    workers finish together) when given, else md5(key) mod n. Each
-    shard is written by ONE `applyInPandas` group (members sorted by
-    key, fixed zero mtime/uid), so a re-export is byte-identical —
-    tars diff clean across runs. Returns the manifest
-    (``shard``, ``n_members``, ``n_bytes``) — the action that also
-    performs the write.
-
-    Scale: one shuffle on the shard id; each task streams its group
-    through ``tarfile`` without materializing the shard in memory
-    beyond Arrow's batch. Payloads never shuffle twice.
-    """
-    import os
-
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    if not payload_cols:
-        raise ValueError("write_webdataset() needs at least one payload column")
-    os.makedirs(path, exist_ok=True)
-    if size_col is not None:
-        from datas_spark.operators.training import balanced_shards
-
-        work = balanced_shards(df, key_col, size_col, n_shards)
-    else:
-        work = df.withColumn(
-            "shard",
-            F.pmod(
-                F.conv(F.md5(F.col(key_col).cast("string")).substr(1, 15), 16, 10)
-                .cast("long"),
-                F.lit(n_shards),
-            ).cast("int"),
-        )
-    sel = work.select(key_col, "shard", *payload_cols)
-
-    def _write(pdf: pd.DataFrame) -> pd.DataFrame:
-        import io
-        import tarfile
-
-        shard = int(pdf["shard"].iloc[0])
-        pdf = pdf.sort_values(key_col)
-        out = os.path.join(path, f"shard-{shard:05d}.tar")
-        n_bytes = 0
-        with tarfile.open(out, "w") as tar:
-            for _, row in pdf.iterrows():
-                for col in payload_cols:
-                    v = row[col]
-                    data = v if isinstance(v, (bytes, bytearray)) else str(v).encode()
-                    info = tarfile.TarInfo(name=f"{row[key_col]}.{col}")
-                    info.size = len(data)
-                    info.mtime = 0
-                    tar.addfile(info, io.BytesIO(bytes(data)))
-                    n_bytes += len(data)
-        return pd.DataFrame(
-            {"shard": [shard], "n_members": [len(pdf) * len(payload_cols)],
-             "n_bytes": [n_bytes]}
-        )
-
-    return sel.groupBy("shard").applyInPandas(
-        _write, "shard int, n_members long, n_bytes long"
-    )

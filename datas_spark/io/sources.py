@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 TPCH_TABLES = (
@@ -40,42 +40,6 @@ def read_json_auto(spark: SparkSession, path: str) -> DataFrame:
     if path.endswith(".jsonl"):
         return spark.read.json(path)
     return spark.read.option("multiLine", "true").json(path)
-
-
-def read_jsonl_robust(
-    spark: SparkSession,
-    path: str,
-    schema_ddl: str,
-    corrupt_col: str = "_corrupt_record",
-) -> tuple[DataFrame, DataFrame]:
-    """S1 hardened for real ingest feeds: PERMISSIVE line-delimited
-    JSON scan with explicit schema (no inference pass over the corpus)
-    where malformed lines survive WHOLE in ``corrupt_col`` instead of
-    aborting the job or silently dropping — a web-scale crawl always
-    contains truncated lines, stray carriage returns, and partial
-    writes, and losing them silently is how corpus counts stop
-    reconciling.
-
-    Returns ``(good, bad)``: ``good`` carries the schema columns for
-    rows that parsed; ``bad`` carries one ``raw`` string per rejected
-    line, ready for a quarantine write (`validate.quarantine`'s file
-    cousin). The scan is cached before splitting because Spark
-    disallows queries that reference ONLY the internal corrupt-record
-    column on a raw file scan; the cache also means the two splits
-    share one physical read.
-    """
-    full = f"{schema_ddl}, {corrupt_col} string"
-    df = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .json(path)
-    ).cache()
-    good = df.where(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    bad = df.where(F.col(corrupt_col).isNotNull()).select(
-        F.col(corrupt_col).alias("raw")
-    )
-    return good, bad
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -95,10 +59,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return df
     return spark.read.parquet(path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TPCH_TABLES) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}
 
 
 def with_row_id(df: DataFrame, order_by: str | Column | list, name: str = "row_id") -> DataFrame:
@@ -159,26 +119,3 @@ def row_range(
         .where((F.col("__rn") >= start) & (F.col("__rn") < upper))
         .drop("__rn")
     )
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: str | None = None,
-    header: bool = True,
-    sep: str = ",",
-) -> DataFrame:
-    """CSV scan with an EXPLICIT schema by default — ``inferSchema``
-    triggers a full extra pass over the data (a second 100 TB scan to
-    guess types); pass the DDL string instead. ``schema=None`` falls
-    back to all-string columns (never the inference pass), which is
-    the safe default for untrusted feeds: cast + validate explicitly
-    downstream (`validate.quarantine`)."""
-    reader = (
-        spark.read.option("header", str(header).lower())
-        .option("sep", sep)
-        .option("mode", "PERMISSIVE")
-    )
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.csv(path)

@@ -39,9 +39,6 @@ __all__ = [
     "scd2_repair_partitioned",
 ]
 
-_SCD_COLS = ("valid_from", "valid_to", "change_seq", "is_current")
-
-
 def _attrs_changed(attr_cols: list[str], w) -> Column:
     """True when any attribute differs (null-safely) from the previous
     change of the same key."""
@@ -201,8 +198,7 @@ def scd2_repair_partitioned(
     only the partitions named by the straggler batch are read (the
     IN-list pushes to PartitionFilters) and rewritten (dynamic
     partition overwrite) — untouched partitions' FILES are never opened
-    or replaced (mtime-proven in ``tests/test_cdc.py``, the same
-    isolation contract as ``io.maintenance.upsert_partitioned``).
+    or replaced (mtime-proven in ``tests/test_cdc.py``).
 
     ``partition_expr`` must be a pure function of the key columns
     (e.g. ``F.col("custkey") % 64``) — it is re-derived for the
@@ -225,7 +221,7 @@ def scd2_repair_partitioned(
         hist, log, late_changes, key_cols, attr_cols, ts_col, seq_col
     ).withColumn(partition_col, partition_expr)
     # materialize before the overwrite: the plan reads the very files
-    # dynamic overwrite replaces (same contract as upsert_partitioned)
+    # dynamic overwrite replaces
     repaired = repaired.localCheckpoint(eager=True)
     old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

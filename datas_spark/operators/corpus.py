@@ -2318,9 +2318,8 @@ def doc_novelty_rate(
     Docs whose novelty cannot be certified — zero shingles (shorter
     than ``n`` tokens) — yield NULL novelty_rate and route to
     ``review`` alongside sub-threshold (memorization-suspect) docs;
-    the rest route ``release`` (the `hamming_hot_bucket_members`
-    routing discipline: the cheap tier decides, the suspect residue
-    gets the expensive look).
+    the rest route ``release`` (the cheap tier decides, the suspect
+    residue gets the expensive look).
 
     Returns one row per eval doc:
     ``(id, n_grams, n_known, novelty_rate, route)``.

@@ -1590,12 +1590,9 @@ def hamming_near_dup_pairs(
     hot bucket at 5M. The cap is computed INSIDE the plan (a lazy 1-row
     count crossJoined broadcast — no call-time action) as
     ``clamp(16 * ceil(n / 2^width), 1024, 2048)``; see
-    ``_auto_cap_expr`` for the floor/ceiling rationale. Dropped hot
-    buckets are recoverable through the verify tier:
-    ``hamming_hot_bucket_members`` lists their docs for routing to
-    ``minhash_lsh_pairs`` / ``ngram_jaccard`` (whose shingle-hash
-    buckets don't share SimHash's template-collision failure mode), and
-    the ``simhash_cap_agreement`` query measures the recall trade as a
+    ``_auto_cap_expr`` for the floor/ceiling rationale. Pairs in
+    dropped hot buckets are lost to this detector; the
+    ``simhash_cap_agreement`` query measures that recall trade as a
     Venn against the uncapped twin.
     """
     if not 1 <= max_hamming < bands:
@@ -1677,43 +1674,6 @@ def hamming_cap_agreement(
             "round(100.0D * pairs_both / "
             "nullif(pairs_both + pairs_only_uncapped, 0), 6)"
         ).alias("recall_pct"),
-    )
-
-
-def hamming_hot_bucket_members(
-    df: DataFrame,
-    id_col: str,
-    sig_col: str,
-    bits: int = 60,
-    bands: int = 4,
-    max_bucket_size: int | str = "auto",
-) -> DataFrame:
-    """Distinct ids living in OVER-cap hamming buckets — exactly the
-    docs a capped ``hamming_near_dup_pairs`` run skipped. The routing
-    half of the cap's recall trade: feed these to the MinHash/Jaccard
-    verify tier (``minhash_lsh_pairs`` / ``ngram_jaccard_pairs``),
-    whose shingle-content buckets don't share SimHash's band-collision
-    failure mode, so a template-boilerplate cluster too hot for
-    hamming banding still gets its genuine dup pairs from content
-    shingles. Returns one column ``id_col``. Same banding and the same
-    auto-cap formula as the pair detector, so capped-pairs ∪
-    verify-tier(members) covers the corpus by construction."""
-    banded, width = _hamming_banded(df, id_col, sig_col, bits, bands)
-    banded = banded.drop("simhash")
-    counts = banded.groupBy("band", "bval").agg(F.count(F.lit(1)).alias("__bc"))
-    if max_bucket_size == "auto":
-        n1 = df.agg(F.count(F.lit(1)).alias("__n"))
-        hot = (
-            counts.join(F.broadcast(n1))
-            .where(F.col("__bc") > _auto_cap_expr(F.col("__n"), width))
-            .select("band", "bval")
-        )
-    else:
-        hot = counts.where(F.col("__bc") > max_bucket_size).select("band", "bval")
-    return (
-        banded.join(hot, ["band", "bval"], "left_semi")
-        .select(F.col("__id").alias(id_col))
-        .distinct()
     )
 
 

@@ -919,6 +919,8 @@ def markov_attribution(
     ``(channel, p_conv_base, removal_effect, attribution_pct,
     attributed_conversions)``.
     """
+    from datas_spark.operators.clustering import _spark_round
+
     key, ts, order, typ = (
         F.col(key_col), F.col(ts_col), F.col(order_col), F.col(type_col)
     )
@@ -990,7 +992,7 @@ def markov_attribution(
                     if c == removed:
                         continue
                     acc += counts.get((s, c), 0.0) / tot * p[c]
-                nxt[s] = round(acc, 12)
+                nxt[s] = _spark_round(acc, 12)
             p = nxt
         return p["__start__"]
 
@@ -1005,12 +1007,12 @@ def markov_attribution(
     out = [
         (
             c,
-            round(p_base, 6),
-            round(re[c], 6) if re[c] is not None else None,
-            round(re[c] / tot_re * 100.0, 4)
+            _spark_round(p_base, 6),
+            _spark_round(re[c], 6) if re[c] is not None else None,
+            _spark_round(re[c] / tot_re * 100.0, 4)
             if re[c] is not None and tot_re > 0
             else None,
-            round(re[c] / tot_re * n_conv, 2)
+            _spark_round(re[c] / tot_re * n_conv, 2)
             if re[c] is not None and tot_re > 0
             else None,
         )

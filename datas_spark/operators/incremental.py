@@ -1,7 +1,5 @@
 """Incremental aggregate maintenance: keep a grouped rollup current by
-merging a small delta instead of recomputing over the full history —
-the batch counterpart of the streaming materialized view
-(`streaming.materialize_window_counts`).
+merging a small delta instead of recomputing over the full history.
 
 Works for ALGEBRAIC aggregates — those with a mergeable partial form:
 count/sum/min/max directly, mean as (sum, count). At 100 TB this is
@@ -21,9 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["partial_rollup", "merge_rollups", "finalize_rollup", "ivm_join_delta"]
-
-_PARTIAL_COLS = ("cnt", "sum_val", "min_val", "max_val")
-
 
 def partial_rollup(
     df: DataFrame, keys: list[str], value_col: str,

@@ -1425,56 +1425,6 @@ def ann_recall_report(
     )
 
 
-def ivf_index_upsert(
-    spark,
-    path: str,
-    new_data: DataFrame,
-    cells: DataFrame,
-    data_id: str,
-    cell_id: str,
-    vec_col: str,
-) -> None:
-    """Incremental IVF index maintenance: absorb a new/updated batch of
-    vectors into a persisted cell-partitioned index WITHOUT
-    re-clustering or rewriting the corpus — the ops path that keeps a
-    100 TB ANN index fresh under daily ingest (the coarse quantizer is
-    fixed data, so assignment is stable; periodic re-training is a
-    separate full rebuild, exactly as FAISS deployments do it).
-
-    The batch is assigned to cells with the same rounded-cosine min_by
-    contract as ``ivf_topk_fixed`` (so an updated vector moves cells
-    consistently — but note the dynamic-overwrite caveat: a moved id is
-    replaced in its new cell, and its old row is dropped only if the old
-    cell is also touched by this batch; `upsert_partitioned` documents
-    the same rule), then MERGE-liteed into the store: only touched cell
-    partitions are read or rewritten, latest row per ``__did`` wins.
-    """
-    from datas_spark.io.maintenance import upsert_partitioned
-
-    d = new_data.select(
-        F.col(data_id).alias("__did"), F.col(vec_col).alias("__dv")
-    ).withColumn("__dn", l2_norm("__dv"))
-    c = cells.select(
-        F.col(cell_id).alias("__cell"), F.col(vec_col).alias("__cv")
-    ).withColumn("__cn", l2_norm("__cv"))
-    # norms hoisted above the |cells| assignment fan (round 12,
-    # bit-identical — `cosine_from_norms`)
-    cs = F.round(cosine_from_norms("__dv", "__cv", "__dn", "__cn"), 6) + F.lit(0.0)
-    assigned = (
-        d.crossJoin(broadcast(c))
-        .withColumn("__cs", cs)
-        .groupBy("__did")
-        .agg(
-            F.min_by(
-                "__cell", F.struct((-F.col("__cs")).alias("n"), F.col("__cell"))
-            ).alias("__cell")
-        )
-        .join(d, "__did")
-        .select("__did", "__dv", "__cell")
-    )
-    upsert_partitioned(spark, path, assigned, ["__did"], "__cell")
-
-
 def random_projection(
     df: DataFrame,
     vec_col: str,

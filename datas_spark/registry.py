@@ -482,7 +482,7 @@ def q_least_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# events — tumbling-window aggregation (batch twin of the streaming path)
+# events — tumbling-window aggregation
 # ---------------------------------------------------------------------------
 
 @register(
@@ -494,9 +494,7 @@ def q_least_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_events_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1h window × event_type — identical plan shape to the
-    Structured Streaming scorer (datas_spark.streaming); verified here
-    on the batch twin."""
+    """Tumbling 1h window × event_type."""
     ev = read_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")

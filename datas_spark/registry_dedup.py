@@ -2700,9 +2700,6 @@ def _er_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionAll(dup)
 
 
-_ER_FIELDS = None  # built lazily to avoid importing linkage at module import
-
-
 def _er_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datas_spark.operators import linkage as LK
 

@@ -151,8 +151,8 @@ def q_events_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_events_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once ingest sanity: drop replayed events on the natural
     key (user, ts, type), keeping the smallest event_id — min_by
-    map-side election, the batch twin of the streaming
-    dropDuplicatesWithinWatermark path (stream_dedup)."""
+    map-side election (a stream would use
+    dropDuplicatesWithinWatermark on the same key)."""
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )

@@ -386,8 +386,7 @@ def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to the uncapped run (measured max occupancy 321 at
     sf1 vs floor 1024); the DuckDB oracle replays the cap exactly, so
     the query stays hash-green even at scales where the cap binds.
-    Dropped docs are routable to the shingle verify tier
-    (``hamming_hot_bucket_members``); the recall trade is measured by
+    The recall trade of the dropped buckets is measured by
     ``simhash_cap_agreement``."""
     from datas_spark.operators import dedup as D
 

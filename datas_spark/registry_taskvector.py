@@ -698,8 +698,7 @@ def q_datas_full_pipeline_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding 1h/30min window counts — the streaming
-    ``windowed_event_agg(slide=...)`` plan executed on the batch twin
+    """Sliding 1h/30min window counts — a hopping ``window`` groupBy
     (each event lands in exactly two windows)."""
     ev = read_table(spark, sf_dir, "events")
     return (

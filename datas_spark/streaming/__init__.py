@@ -1,9 +1,5 @@
 from datas_spark.streaming.scoring import (  # noqa: F401
-    read_event_stream,
-    score_stream,
-    sequential_monitor_sink,
-    sequential_monitor_state,
+    enrich_stream,
+    join_streams,
     sessionize,
-    stream_dedup,
-    windowed_event_agg,
 )

@@ -97,9 +97,14 @@ def _bindings(stmts, modules):
     return out
 
 
-def _touched_queries(rev, queries):
-    """Registered query names whose builders reach a node changed since
-    ``rev``."""
+def call_graph():
+    """The AST call graph of ``datas_spark/``: ``(trees, edges, refs)``.
+
+    ``trees`` maps each module name to its parsed source and ``edges``
+    maps each ``(module, name)`` node of ``_nodes`` to the set of nodes
+    it references. ``refs(mod, node, cls=None)`` gives the nodes that
+    any AST ``node`` loads when read in module ``mod`` (``None`` for a
+    file outside the package, whose own imports then bind its names)."""
     trees = {}
     for d, _, files in os.walk(os.path.join(ROOT, "datas_spark")):
         for f in files:
@@ -117,27 +122,36 @@ def _touched_queries(rev, queries):
             return resolve(*target, depth + 1)
         return None
 
-    edges = {}
-    for mod, defs in nodes.items():
-        for name, node in defs.items():
-            local = {**imports[mod], **_bindings(ast.walk(node), trees)}
-            cls = name.split(".")[0] if "." in name else None
-            refs = set()
-            for n in ast.walk(node):
-                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
-                    target = local.get(n.id)
-                    if target is None:
-                        refs.add(resolve(mod, n.id))
-                    elif target[1]:
-                        refs.add(resolve(*target))
-                elif isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name):
-                    base = n.value.id
-                    if cls and base in ("self", "cls"):
-                        refs.add(resolve(mod, f"{cls}.{n.attr}"))
-                    elif base in local and local[base][1] is None:
-                        refs.add(resolve(local[base][0], n.attr))
-            edges[(mod, name)] = refs - {None}
+    def refs(mod, node, cls=None):
+        local = {**imports.get(mod, {}), **_bindings(ast.walk(node), trees)}
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                target = local.get(n.id)
+                if target is None:
+                    out.add(resolve(mod, n.id))
+                elif target[1]:
+                    out.add(resolve(*target))
+            elif isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name):
+                base = n.value.id
+                if cls and base in ("self", "cls"):
+                    out.add(resolve(mod, f"{cls}.{n.attr}"))
+                elif base in local and local[base][1] is None:
+                    out.add(resolve(local[base][0], n.attr))
+        return out - {None}
 
+    edges = {
+        (mod, name): refs(mod, node, name.split(".")[0] if "." in name else None)
+        for mod, defs in nodes.items()
+        for name, node in defs.items()
+    }
+    return trees, edges, refs
+
+
+def _touched_queries(rev, queries):
+    """Registered query names whose builders reach a node changed since
+    ``rev``."""
+    trees, edges, _ = call_graph()
     diff = subprocess.run(
         ["git", "diff", "-U0", rev, "--", "datas_spark"],
         cwd=ROOT, capture_output=True, text=True, check=True,

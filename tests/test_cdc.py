@@ -312,7 +312,7 @@ def test_repair_untouched_keys_pass_through(spark, changelog):
 def test_repair_partitioned_touches_only_straggler_partitions(
     spark, changelog, tmp_path
 ):
-    """The mtime-isolation contract (same as upsert_partitioned's):
+    """The mtime-isolation contract:
     a straggler batch for key 1 must leave every other partition's
     FILES untouched — not re-read-and-rewritten-identically."""
     import glob

@@ -584,11 +584,7 @@ def test_simhash_auto_cap_binds_on_degenerate_corpus(spark):
     not just a documented intention. 3000 near-identical docs share
     band values, blowing a synthetic floor... the real floor is 1024,
     so exceed it."""
-    from datas_spark.operators.dedup import (
-        hamming_hot_bucket_members,
-        simhash,
-        simhash_near_dup_pairs,
-    )
+    from datas_spark.operators.dedup import simhash_near_dup_pairs
 
     n = 1200  # > AUTO_CAP_FLOOR=1024 docs in one boilerplate cluster
     docs = spark.createDataFrame(
@@ -599,58 +595,6 @@ def test_simhash_auto_cap_binds_on_degenerate_corpus(spark):
         docs, "doc_id", "text", bits=60, bands=4, max_bucket_size="auto"
     ).count()
     assert capped == 0  # all four band buckets hold n > 1024 members
-    # ...and the routing half lists exactly those docs for the verify tier
-    sig = simhash(docs, "text", 60).select("doc_id", "simhash")
-    hot = hamming_hot_bucket_members(
-        sig, "doc_id", "simhash", bits=60, bands=4, max_bucket_size="auto"
-    )
-    assert hot.count() == n
-
-
-def test_hot_bucket_members_route_to_shingle_verify_tier(spark):
-    """The cap's documented recovery path end-to-end: a genuine dup
-    pair living in an over-cap bucket is dropped by the capped hamming
-    run, listed by hamming_hot_bucket_members, and RECOVERED by the
-    MinHash verify tier run on just those members."""
-    from datas_spark.operators.dedup import (
-        hamming_hot_bucket_members,
-        minhash_lsh_pairs,
-        simhash,
-        simhash_near_dup_pairs,
-    )
-
-    # 12 boilerplate docs (hot bucket under cap=8) containing a true
-    # dup pair; two unrelated docs stay in cold buckets
-    rows = [
-        (i, "shared boilerplate template body number %d with filler text" % i)
-        for i in range(12)
-    ]
-    rows += [(100, "a completely different document about gardens and rivers"),
-             (101, "a completely different document about gardens and rivers")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sig = simhash(docs, "text", 60).select("doc_id", "simhash")
-    from datas_spark.operators.dedup import hamming_near_dup_pairs
-
-    capped = hamming_near_dup_pairs(
-        sig, "doc_id", "simhash", bits=60, bands=4, max_hamming=3,
-        max_bucket_size=8,
-    )
-    capped_pairs = {(r.id_a, r.id_b) for r in capped.collect()}
-    assert (100, 101) in capped_pairs  # cold-bucket pair unaffected
-    hot_ids = {
-        r.doc_id
-        for r in hamming_hot_bucket_members(
-            sig, "doc_id", "simhash", bits=60, bands=4, max_bucket_size=8
-        ).collect()
-    }
-    if hot_ids:  # boilerplate docs landed in a hot bucket
-        rescued = minhash_lsh_pairs(
-            docs.where(F.col("doc_id").isin(hot_ids)),
-            "doc_id", "text", min_est_jaccard=0.5,
-        )
-        total = capped_pairs | {(r.id_a, r.id_b) for r in rescued.collect()}
-        # the verify tier finds the template cluster's high-overlap pairs
-        assert any(a < 12 and b < 12 for a, b in total)
 
 
 def test_cap_agreement_matches_two_real_runs(spark, sf_dir):

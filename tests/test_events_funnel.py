@@ -502,6 +502,31 @@ def test_markov_attribution_journey_rules(spark):
     assert out["click"].p_conv_base == 1.0
 
 
+def test_markov_attribution_rounds_ties_half_up(spark):
+    """The driver-side rounding matches Spark's and DuckDB's HALF_UP
+    ``round``, not Python's half-even: one journey through 8 distinct
+    channels credits each with 1/8 = 0.125 conversions, which both
+    engines round to 0.13 at 2 dp."""
+    from datas_spark.operators.events import markov_attribution
+    import datetime as dtm
+
+    T = dtm.datetime
+    rows = [(1, T(2024, 1, 1, 10, i), i, f"c{i}") for i in range(8)]
+    rows.append((1, T(2024, 1, 1, 10, 8), 8, "buy"))
+    df = spark.createDataFrame(
+        rows, "user_id long, ts timestamp, event_id long, event_type string"
+    )
+    out = markov_attribution(
+        df, "user_id", "ts", "event_id", "event_type", "buy", n_steps=16
+    ).collect()
+    assert [r.channel for r in out] == [f"c{i}" for i in range(8)]
+    assert spark.sql("SELECT round(0.125D, 2) AS r").first().r == 0.13
+    for r in out:
+        assert r.removal_effect == 1.0
+        assert r.attribution_pct == 12.5
+        assert r.attributed_conversions == 0.13
+
+
 def test_uplift_curve_front_loads_incremental_conversions(spark):
     """A perfect uplift score (converts iff treated AND high score)
     shows qini == all incremental conversions at the high threshold

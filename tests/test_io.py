@@ -84,134 +84,3 @@ def test_tsne_gated_on_sklearn(spark):
         pass
     with pytest.raises(NotImplementedError, match="scikit-learn"):
         tsne_viz(df, "v")
-
-
-# --- format completeness (batch 68) -------------------------------------
-
-def test_csv_roundtrip_with_schema(spark, tmp_path):
-    from datas_spark.io.sinks import write_table
-    from datas_spark.io.sources import read_csv
-
-    df = spark.createDataFrame(
-        [(1, "a,b", 1.5), (2, None, -3.0)], "id long, s string, v double"
-    )
-    write_table(df, str(tmp_path / "t_csv"), file_format="csv")
-    back = read_csv(spark, str(tmp_path / "t_csv"), schema="id long, s string, v double")
-    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
-    # schema-less fallback: all strings, no inference pass
-    raw = read_csv(spark, str(tmp_path / "t_csv"))
-    assert all(t == "string" for _, t in raw.dtypes)
-
-
-def test_orc_roundtrip_with_partitioning(spark, tmp_path):
-    import glob
-
-    from datas_spark.io.sinks import write_table
-
-    df = spark.createDataFrame(
-        [(1, "x", 10.0), (2, "y", 20.0), (3, "x", 30.0)], "id long, k string, v double"
-    )
-    write_table(df, str(tmp_path / "t_orc"), file_format="orc", partition_by=["k"])
-    assert glob.glob(str(tmp_path / "t_orc" / "k=x"))
-    back = spark.read.orc(str(tmp_path / "t_orc"))
-    assert back.count() == 3
-    assert {r.v for r in back.where("k = 'x'").collect()} == {10.0, 30.0}
-
-
-def test_gzip_jsonl_roundtrip(spark, tmp_path):
-    from datas_spark.io.sinks import write_table
-
-    df = spark.createDataFrame([(i, f"t{i}") for i in range(10)], "id long, s string")
-    write_table(df, str(tmp_path / "t_gz"), file_format="json", compression="gzip")
-    import glob
-    assert glob.glob(str(tmp_path / "t_gz" / "*.json.gz"))
-    # codec is transparent to the line-delimited reader
-    back = spark.read.json(str(tmp_path / "t_gz"))
-    assert back.count() == 10
-
-
-def test_write_table_rejects_unknown_format(spark, tmp_path):
-    from datas_spark.io.sinks import write_table
-
-    df = spark.createDataFrame([(1,)], "id long")
-    with pytest.raises(ValueError, match="unsupported"):
-        write_table(df, str(tmp_path / "x"), file_format="avro")
-
-
-# ---------------------------------------------------------------------------
-# round 6: WebDataset tar-shard export
-# ---------------------------------------------------------------------------
-
-
-def test_write_webdataset_roundtrip_and_deterministic(spark, tmp_path):
-    import hashlib
-    import os
-    import tarfile
-
-    from datas_spark.io.sinks import write_webdataset
-
-    rows = [(i, f"text body {i}", bytes([i % 256, 255 - i % 256])) for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, blob binary")
-
-    out1 = str(tmp_path / "wds1")
-    manifest = write_webdataset(df, out1, "doc_id", ["text", "blob"], n_shards=4).collect()
-    assert {r["shard"] for r in manifest} == {0, 1, 2, 3}
-    assert sum(r["n_members"] for r in manifest) == 80
-
-    # read every member back and verify contents
-    seen = {}
-    for f in sorted(os.listdir(out1)):
-        with tarfile.open(os.path.join(out1, f)) as tar:
-            names = tar.getnames()
-            # deterministic member order: sorted by key, payload cols in
-            # declaration order within each key
-            keys = [n.split(".")[0] for n in names[::2]]
-            assert keys == sorted(keys, key=int)
-            assert all(n.endswith(".text") for n in names[::2])
-            assert all(n.endswith(".blob") for n in names[1::2])
-            for m in tar.getmembers():
-                seen[m.name] = tar.extractfile(m).read()
-    for i, text, blob in rows:
-        assert seen[f"{i}.text"] == text.encode()
-        assert seen[f"{i}.blob"] == blob
-    # re-export is byte-identical
-    out2 = str(tmp_path / "wds2")
-    write_webdataset(df, out2, "doc_id", ["text", "blob"], n_shards=4).collect()
-    h = lambda d: {
-        f: hashlib.md5(open(os.path.join(d, f), "rb").read()).hexdigest()
-        for f in sorted(os.listdir(d))
-    }
-    assert h(out1) == h(out2)
-
-
-def test_write_webdataset_size_balanced(spark, tmp_path):
-    from datas_spark.io.sinks import write_webdataset
-
-    rows = [(i, "x" * (100 + 37 * (i % 11)), 100 + 37 * (i % 11)) for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, text string, n long")
-    man = {
-        r["shard"]: r["n_bytes"]
-        for r in write_webdataset(
-            df, str(tmp_path / "wds"), "doc_id", ["text"], n_shards=4, size_col="n"
-        ).collect()
-    }
-    assert len(man) == 4
-    assert max(man.values()) - min(man.values()) <= max(100 + 37 * 10, 1)
-
-
-def test_read_jsonl_robust_quarantines_bad_lines(spark, tmp_path):
-    from datas_spark.io.sources import read_jsonl_robust
-
-    src = tmp_path / "feed.jsonl"
-    src.write_text(
-        '{"doc_id": 1, "text": "ok one"}\n'
-        "this is not json at all\n"
-        '{"doc_id": 2, "text": "ok two"}\n'
-        '{"doc_id": 3, "text": "truncated\n'
-    )
-    good, bad = read_jsonl_robust(spark, str(src), "doc_id bigint, text string")
-    g = sorted((r["doc_id"], r["text"]) for r in good.collect())
-    assert g == [(1, "ok one"), (2, "ok two")]
-    b = sorted(r["raw"] for r in bad.collect())
-    assert len(b) == 2
-    assert "not json" in b[1] or "not json" in b[0]

@@ -360,49 +360,6 @@ def test_ann_recall_report_counts(spark):
 
 
 @pytest.mark.slow
-def test_ivf_index_upsert_equals_fresh_build(spark, tmp_path):
-    import os
-
-    from pyspark.sql import functions as F
-
-    from datas_spark.operators.similarity import ivf_index_upsert
-
-    rows, df = _vecs(spark, n=60, dim=8, seed=21)
-    cells = df.where("id < 4").selectExpr("id as cell", "v")
-    path = str(tmp_path / "ivf_index")
-
-    # initial build from the first half
-    first = df.where("id < 30")
-    ivf_index_upsert(spark, path, first, cells, "id", "cell", "v")
-    # absorb the second half plus an UPDATED vector for id 5
-    updated = df.where("id >= 30").unionByName(
-        df.where("id = 5").select("id", F.transform("v", lambda x: x * 2).alias("v"))
-    )
-    ivf_index_upsert(spark, path, updated, cells, "id", "cell", "v")
-
-    merged = spark.read.parquet(path)
-    # fresh build over the same final corpus
-    final = df.where("id != 5").unionByName(
-        df.where("id = 5").select("id", F.transform("v", lambda x: x * 2).alias("v"))
-    )
-    fresh_path = str(tmp_path / "ivf_fresh")
-    ivf_index_upsert(spark, fresh_path, final, cells, "id", "cell", "v")
-    fresh = spark.read.parquet(fresh_path)
-
-    key = lambda r: r["__did"]
-    got = sorted(
-        [(r["__did"], r["__cell"], [round(x, 9) for x in r["__dv"]]) for r in merged.collect()]
-    )
-    want = sorted(
-        [(r["__did"], r["__cell"], [round(x, 9) for x in r["__dv"]]) for r in fresh.collect()]
-    )
-    assert got == want
-    assert len(got) == 60
-    # the store is genuinely cell-partitioned
-    assert any(p.startswith("__cell=") for p in os.listdir(path))
-
-
-@pytest.mark.slow
 def test_pq_topk_on_persisted_codes_equals_inline(spark, tmp_path):
     from datas_spark.operators.similarity import pq_encode, pq_topk_on_codes
 

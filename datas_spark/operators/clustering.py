@@ -7,15 +7,20 @@ embedding stays a distributed ``array<float>`` column end-to-end:
 ``array_to_vector`` bridges into MLlib, KMeans fit streams over the
 data (executors aggregate, only k centroids come to the driver), and
 ``transform`` appends the cluster label as a column — no N×4096 driver
-materialization. The deterministic twin `kmeans_lloyd` keeps the same
-shape: per round one collected ≤ k·dim-row moment aggregate, with the k
-centroids held on the driver and inlined into the next round's
-map-only assignment as one literal (under AQE every action over a
-shuffled plan — a lazy checkpoint included — runs its stages anyway, so
-keeping the centroids in-plan saved no jobs). Its round loop,
-`_lloyd_rounds`, is the one Lloyd core in the engine: the PQ codebook
-trainer (`similarity.pq_codebooks_lloyd`) runs its m subspaces through
-it as one grouped instance.
+materialization. The deterministic twin `kmeans_lloyd` keeps the
+k centroids on the driver and inlines them into each map-only
+assignment as one literal. Below `LLOYD_DRIVER_MAX_BYTES` of quantized
+vectors — the shape of the reference, which clusters a driver-held
+matrix — one bounded Arrow collect brings the points to the driver and
+the seed draw and every round run there in exact int64 numpy
+(`_lloyd_driver`): no Spark job per round. Above the cap, or when a
+precondition of the twin fails, the rounds stay distributed: per round
+one collected ≤ k·dim-row moment aggregate (`_lloyd_rounds`; under
+AQE every action over a shuffled plan — a lazy checkpoint included —
+runs its stages anyway, so keeping the centroids in-plan saved no
+jobs). The two are the one Lloyd core in the engine: the PQ codebook
+trainer (`similarity.pq_codebooks_lloyd`) runs its m subspaces
+through them.
 
 t-SNE (F4) has no distributed formulation; the reference uses it only
 for a scatter-plot png (main.py:360-376). We keep it driver-side,
@@ -35,6 +40,20 @@ from pyspark.sql import functions as F
 # THIS constant — the oracle CTEs replay every Lloyd run at this scale,
 # so a drifted copy would silently desynchronize codebooks from them
 DEFAULT_SCALE = 1_000_000
+
+# Driver-bytes contract of the Lloyd twin (`_lloyd_collect`): one Arrow
+# collect of at most LLOYD_DRIVER_MAX_BYTES // (8 · LLOYD_DRIVER_MAX_WIDTH)
+# + 1 points, each vector only when it is at most LLOYD_DRIVER_MAX_WIDTH
+# wide, so the int64 matrix the driver rounds over holds at most this
+# many bytes (131,072 points × 64 dims) and a wide LLM embedding never
+# reaches the driver at the row cap: it falls back to the distributed
+# rounds. On 4 local cores, 3 rounds over 10⁵ random points took 1.0 /
+# 0.9 s on the driver against 1.8 / 9.1 s distributed at dim 8 and k 5 /
+# 64, and 2.3 / 2.5 s against 5.6 / 41 s at dim 64 (mostly the collect;
+# the numpy rounds took at most 0.5 s). No measured size reached a
+# crossover, so the cap bounds driver memory, not time.
+LLOYD_DRIVER_MAX_BYTES = 64 << 20
+LLOYD_DRIVER_MAX_WIDTH = 64
 
 __all__ = [
     "DEFAULT_SCALE",
@@ -125,21 +144,37 @@ def kmeans_lloyd(
 
     Plan shape (scale contract): the k centroids live on the DRIVER as
     Python int lists — MLlib's own "only k centroids reach the driver"
-    shape — and the rounds run in `_lloyd_rounds`, the one Lloyd core
-    the grouped PQ codebook trainer shares: a map-only assignment fold
-    per point against the centroids inlined as ONE constant-folded
-    array literal (NEVER a points×centroids shuffle), then one collected
-    ≤ k·dim-row (cluster, dim) moment aggregate and the driver's exact
-    ``s // n``. Why a collect per round instead of a lazy in-plan
-    centroid row: under AQE any action over a plan with exchanges —
-    including the lazy ``localCheckpoint`` a lazy round would need to
-    keep lineage flat — already runs every query stage, so a lazy round
-    costs the same jobs plus a broadcast cross join and a per-slot
-    rebuild of the centroid row. Per call: one seed collect (plus one
-    count for ``k="auto"``) and two jobs per round; the points frame is
-    lazily localCheckpoint-ed so rounds rescan it, not ``df``. At 10⁹
-    rows the per-round cost is one scan + one k·dim-row aggregate,
-    exactly KMeans' lower bound.
+    shape — and the points frame is lazily localCheckpoint-ed. One
+    bounded Arrow collect of it (`_lloyd_collect`) picks the path:
+
+    - the driver twin (`_lloyd_driver`), when the points fit
+      `LLOYD_DRIVER_MAX_BYTES` (at most ``LLOYD_DRIVER_MAX_BYTES // (8 ·
+      LLOYD_DRIVER_MAX_WIDTH)`` points, none wider than
+      ``LLOYD_DRIVER_MAX_WIDTH``) and its preconditions hold: no NULL
+      id, vector or component, one vector width, distinct
+      ``md5(cast(id as string))`` values (so distinct ids and a seed
+      order that needs no tie-break), and ``dim·(2·max|q|)² < 2⁶³`` and
+      ``n·max|q| < 2⁶³`` (so every distance and moment sum is exact in
+      int64). The seed draw, every round and the ``k="auto"`` row
+      count run on the driver; per call that is ONE Spark job, and
+      the result equals the distributed rounds' exactly.
+    - otherwise the distributed rounds, `_lloyd_rounds` — the reference
+      semantics, NULL rules and ANSI overflow errors included: one seed
+      collect (plus one count for ``k="auto"`` above the cap), then per
+      round a map-only assignment fold per point against the centroids
+      inlined as ONE constant-folded array literal (NEVER a
+      points×centroids shuffle) and one collected ≤ k·dim-row (cluster,
+      dim) moment aggregate, two jobs per round. Why a collect per
+      round instead of a lazy in-plan centroid row: under AQE any
+      action over a plan with exchanges — including the lazy
+      ``localCheckpoint`` a lazy round would need to keep lineage flat —
+      already runs every query stage, so a lazy round costs the same
+      jobs plus a broadcast cross join and a per-slot rebuild of the
+      centroid row. At 10⁹ rows the per-round cost is one scan + one
+      k·dim-row aggregate, exactly KMeans' lower bound.
+
+    Either way the final assignment is the same map-only `_nearest`
+    pass over the points frame.
 
     Σq per (cluster, dim) stays long-exact up to ~2^63/(|x|max·scale)
     rows per cluster (≈9e12 at the e6 default with unit-norm vectors —
@@ -197,10 +232,15 @@ def kmeans_lloyd(
         _quantized(vec_col, scale).alias("__q"),
         *[F.col(c) for c in carry],
     ).localCheckpoint(eager=False)
+    n, q = _lloyd_collect(pts)
     if auto_k:
-        n = pts.count()
+        if n is None:
+            n = pts.count()
         k = max(auto_min_k, min(auto_max_k, math.ceil(math.sqrt(n / auto_target))))
-    cents = _lloyd_rounds(pts, _lloyd_seeds(pts, k), n_rounds)
+    if q is None:
+        cents = _lloyd_rounds(pts, _lloyd_seeds(pts, k), n_rounds)
+    else:
+        cents = _lloyd_driver(q, q[:k], n_rounds)
     final = pts.select(
         F.col("__id").alias(id_col),
         *carry,
@@ -217,6 +257,91 @@ def kmeans_lloyd(
         )
     )
     return final, centroids
+
+
+def _lloyd_collect(pts: DataFrame):
+    """The Lloyd points ``pts.__q`` on the driver, for `_lloyd_driver`:
+    ``(n, q)`` from ONE ``limit(cap + 1)`` Arrow collect, where the cap
+    is ``LLOYD_DRIVER_MAX_BYTES // (8 · LLOYD_DRIVER_MAX_WIDTH)`` points.
+
+    ``n`` is the exact row count of ``pts`` when it is at most the cap,
+    else None. ``q`` is the (n, dim) int64 matrix in seed order —
+    ascending ``md5(cast(__id as string))`` — when the twin's
+    preconditions hold (see `kmeans_lloyd`), else None. A vector wider
+    than ``LLOYD_DRIVER_MAX_WIDTH`` comes back NULL, so it falls back
+    like a NULL vector. The ids themselves are not collected: distinct
+    md5 values imply distinct ids, and with them the distributed
+    ``(md5, id, q)`` seed order is the md5 order."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    cap = LLOYD_DRIVER_MAX_BYTES // (8 * LLOYD_DRIVER_MAX_WIDTH)
+    head = (
+        pts.select(
+            F.md5(F.col("__id").cast("string")).alias("__h"),
+            F.when(F.size("__q") <= LLOYD_DRIVER_MAX_WIDTH, F.col("__q")).alias("__q"),
+        )
+        .limit(cap + 1)
+        .toArrow()
+    )
+    n = head.num_rows
+    if n > cap:
+        return None, None
+    h, vec = head["__h"].combine_chunks(), head["__q"].combine_chunks()
+    flat = vec.flatten()
+    if h.null_count or vec.null_count or flat.null_count:
+        return n, None
+    widths = np.diff(np.asarray(vec.offsets))
+    dim = int(widths[0]) if n else 0
+    if (widths != dim).any() or pc.count_distinct(h).as_py() != n:
+        return n, None
+    vals = np.asarray(flat, dtype=np.int64)
+    big = max(int(vals.max()), -int(vals.min())) if vals.size else 0
+    if dim * (2 * big) ** 2 >= 1 << 63 or n * big >= 1 << 63:
+        return n, None
+    order = np.asarray(pc.sort_indices(h))
+    return n, vals.reshape(n, dim)[order]
+
+
+def _lloyd_driver(q, cents, n_rounds: int) -> list:
+    """``n_rounds`` Lloyd rounds on the driver over the int64 point
+    matrix ``q`` from ``cents`` (an int64 matrix); returns the final
+    centroids as Python int lists — the driver twin of `_lloyd_rounds`,
+    equal to it whenever `_lloyd_collect` returns a matrix.
+
+    Each point joins the centroid with the smallest squared L2 distance
+    (``np.argmin``: ties go to the smaller index); each centroid with
+    members becomes the exact floor mean ``Σq // n`` per dimension, and
+    an empty cluster keeps its centroid. Distances are ranked as
+    ``‖c‖² − 2·q·c`` per block of rows — the dropped ``‖q‖²`` is constant
+    per row — in float64 when ``dim·(2·max|q|)² < 2⁵³`` (every BLAS
+    partial sum is then an exact integer) and in int64 otherwise;
+    moment sums are int64 ``reduceat`` sums. `_lloyd_collect` bounds
+    both below 2⁶³, so every step is exact."""
+    import numpy as np
+
+    cents = np.array(cents, dtype=np.int64)
+    if not len(q):
+        return cents.tolist()
+    big = int(np.abs(q).max()) if q.size else 0
+    dt = np.float64 if q.shape[1] * (2 * big) ** 2 < 1 << 53 else np.int64
+    qd = q.astype(dt)
+    step = max(1, (1 << 20) // len(cents))
+    for _ in range(n_rounds):
+        c = cents.astype(dt)
+        norms = (c * c).sum(axis=1)
+        lab = np.concatenate(
+            [
+                (norms - 2 * (qd[lo : lo + step] @ c.T)).argmin(axis=1)
+                for lo in range(0, len(q), step)
+            ]
+        )
+        cnt = np.bincount(lab, minlength=len(cents))
+        live = np.flatnonzero(cnt)
+        starts = np.concatenate(([0], np.cumsum(cnt[live])[:-1]))
+        sums = np.add.reduceat(q[np.argsort(lab, kind="stable")], starts, axis=0)
+        cents[live] = sums // cnt[live, None]
+    return cents.tolist()
 
 
 def _lloyd_seeds(pts: DataFrame, k: int) -> list:

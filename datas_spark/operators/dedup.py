@@ -50,7 +50,6 @@ from datas_spark.functions.text import (
     hash32,
     hash60,
     normalized_text,
-    shingles,
     shingles_of_tokens,
     word_tokens,
 )

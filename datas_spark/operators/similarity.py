@@ -931,15 +931,20 @@ def pq_codebooks_lloyd(
     The ``m`` per-subspace Lloyd instances share the IDENTICAL seed
     election (the ``(md5(id), id)`` draw never sees the slice, and
     quantize-then-slice equals slice-then-quantize), so the seeds are
-    drawn once and sliced per subspace on the driver, and all ``m``
-    instances run as ONE grouped instance of the Lloyd core
-    (`clustering._lloyd_rounds`) keyed by subspace ``__g``: points
-    live as ``(g, subvector)`` rows, each round is one map-only
+    drawn once and sliced per subspace on the driver. The training
+    points take the same bounded Arrow collect as `kmeans_lloyd`
+    (`clustering._lloyd_collect`): under its cap, and when its
+    preconditions hold, the driver slices the collected vectors per
+    subspace and runs each instance's rounds itself
+    (`clustering._lloyd_driver`) — one Spark job per call. Otherwise
+    all ``m`` instances run as ONE grouped instance of the distributed
+    Lloyd core (`clustering._lloyd_rounds`) keyed by subspace ``__g``:
+    points live as ``(g, subvector)`` rows, each round is one map-only
     assignment pass plus one collected ``(g, code, d)`` moment
     aggregate of at most ks·dim rows, and the m·ks centroids stay on
-    the driver. ``dim`` is an explicit parameter so composing this into
-    a pipeline triggers no pre-plan width probe. Per call: one seed
-    collect and two jobs per round.
+    the driver — one seed collect and two jobs per round. ``dim`` is
+    an explicit parameter so composing this into a pipeline triggers
+    no pre-plan width probe.
 
     Returns the pre-split codebook frame ``(__j int, __code int,
     __cb array<double>, __n2 double)`` that `_pq_encode_presplit` /
@@ -949,6 +954,8 @@ def pq_codebooks_lloyd(
     from datas_spark.operators.clustering import (
         DEFAULT_SCALE,
         _centroid_literal,
+        _lloyd_collect,
+        _lloyd_driver,
         _lloyd_rounds,
         _lloyd_seeds,
         _quantized,
@@ -961,18 +968,23 @@ def pq_codebooks_lloyd(
     pts = train.select(
         F.col(id_col).alias("__id"), _quantized(vec_col, scale).alias("__q")
     ).localCheckpoint(eager=False)
-    seeds = _lloyd_seeds(pts, ks)
-    rows = pts.select(
-        F.posexplode(
-            F.array(*[F.slice("__q", g * sub + 1, sub) for g in range(m)])
-        ).alias("__g", "__q")
-    ).localCheckpoint(eager=False)
-    cents = _lloyd_rounds(
-        rows,
-        [[None if q is None else q[g * sub : (g + 1) * sub] for q in seeds] for g in range(m)],
-        n_rounds,
-        group="__g",
-    )
+    _, q = _lloyd_collect(pts)
+    if q is not None:
+        subs = [q[:, g * sub : (g + 1) * sub] for g in range(m)]
+        cents = [_lloyd_driver(s, s[:ks], n_rounds) for s in subs]
+    else:
+        seeds = _lloyd_seeds(pts, ks)
+        rows = pts.select(
+            F.posexplode(
+                F.array(*[F.slice("__q", g * sub + 1, sub) for g in range(m)])
+            ).alias("__g", "__q")
+        ).localCheckpoint(eager=False)
+        cents = _lloyd_rounds(
+            rows,
+            [[None if v is None else v[g * sub : (g + 1) * sub] for v in seeds] for g in range(m)],
+            n_rounds,
+            group="__g",
+        )
     books = f"array({', '.join(map(_centroid_literal, cents))})"
     out = (
         train.sparkSession.range(1)

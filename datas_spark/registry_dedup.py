@@ -181,7 +181,6 @@ from datas_spark.operators import dedup as D
 from datas_spark.operators.splits import (
     group_safe_split,
     group_split_assign,
-    split_leakage_counts,
 )
 from datas_spark.registry_core import register
 

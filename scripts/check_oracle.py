@@ -148,6 +148,42 @@ def call_graph():
     return trees, edges, refs
 
 
+def _changed_nodes(diff, nodes):
+    """The nodes a ``git diff -U0`` text changes. ``nodes`` maps a module
+    name to its ``(name, start, end)`` spans in the work tree.
+
+    A hunk that adds lines marks each node holding one of them. A pure
+    deletion (``+c,0``) sits between new lines c and c + 1: it marks
+    only a node whose span holds both, so a deletion between two
+    functions marks neither. A deletion whose first non-blank line is
+    indented continues the node holding line c, so dropping the last
+    statements of a function still marks that function."""
+    marks, path, hunk = [], None, None
+    for line in diff.splitlines():
+        if line.startswith("+++ "):
+            path = line[6:] if line.startswith("+++ b/") and line.endswith(".py") else None
+            continue
+        m = re.match(r"@@ -\S+ \+(\d+),?(\d*) @@", line)
+        if m:
+            hunk = None
+            if path:
+                start, count = int(m[1]), 1 if m[2] == "" else int(m[2])
+                hunk = [_module(path), start, count, None]
+                marks.append(hunk)
+        elif hunk and hunk[2] == 0 and hunk[3] is None and line.startswith("-") and line[1:].strip():
+            hunk[3] = line[1:2].isspace()
+    changed = set()
+    for mod, start, count, indented in marks:
+        for name, lo, hi in nodes.get(mod, ()):
+            if count:
+                hit = lo <= start + count - 1 and start <= hi
+            else:
+                hit = lo <= start and (start + 1 <= hi or (indented and start <= hi))
+            if hit:
+                changed.add((mod, name))
+    return changed
+
+
 def _touched_queries(rev, queries):
     """Registered query names whose builders reach a node changed since
     ``rev``."""
@@ -156,21 +192,9 @@ def _touched_queries(rev, queries):
         ["git", "diff", "-U0", rev, "--", "datas_spark"],
         cwd=ROOT, capture_output=True, text=True, check=True,
     ).stdout
-    spans, path = {}, None
-    for line in diff.splitlines():
-        if line.startswith("+++ "):
-            path = line[6:] if line.startswith("+++ b/") and line.endswith(".py") else None
-        m = re.match(r"@@ -\S+ \+(\d+),?(\d*) @@", line)
-        if m and path:
-            start, count = int(m[1]), 1 if m[2] == "" else int(m[2])
-            # a pure deletion sits between lines start and start + 1
-            spans.setdefault(_module(path), []).append(range(start, start + (count or 2)))
-    changed = {
-        (mod, name)
-        for mod, ranges in spans.items()
-        for name, lo, hi, _ in _nodes(trees[mod])
-        if any(lo <= i <= hi for r in ranges for i in r)
-    }
+    changed = _changed_nodes(
+        diff, {mod: [(n, lo, hi) for n, lo, hi, _ in _nodes(t)] for mod, t in trees.items()}
+    )
 
     out = set()
     for qname, fn in queries.items():

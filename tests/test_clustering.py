@@ -1,6 +1,7 @@
 """MLlib-backed ops (F2/F3) — seed-pinned invariants, since SVD signs
 and centroid init aren't SQL-expressible (SURVEY §5)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from datas_spark.io.sources import read_table
@@ -225,19 +226,191 @@ def test_kmeans_lloyd_empty_input(spark):
         assert labels == {} and cents == {}
 
 
-def test_kmeans_lloyd_job_count_per_call(spark, job_count):
-    """Each round is one collected moment aggregate: an int-k call runs
-    at most 2 jobs per round plus the seed pick."""
-    from datas_spark.operators.clustering import kmeans_lloyd
-
-    df = spark.range(0, 400, 1, 4).select(
+def _job_count_frame(spark):
+    return spark.range(0, 400, 1, 4).select(
         F.col("id"),
         F.array(
             ((F.col("id") % 7) / 10).cast("double"),
             ((F.col("id") % 5) / 10).cast("double"),
         ).alias("v"),
     )
-    assert job_count(lambda: kmeans_lloyd(df, "id", "v", k=5, n_rounds=3)) <= 2 * 3 + 2
+
+
+def test_kmeans_lloyd_job_count_per_call(spark, job_count):
+    """Under the driver cap a call runs ONE job — the bounded Arrow
+    collect; the seed draw and every round run on the driver."""
+    from datas_spark.operators.clustering import kmeans_lloyd
+
+    df = _job_count_frame(spark)
+    assert job_count(lambda: kmeans_lloyd(df, "id", "v", k=5, n_rounds=3)) == 1
+    assert job_count(lambda: kmeans_lloyd(df, "id", "v", k="auto", n_rounds=3)) == 1
+
+
+def test_kmeans_lloyd_job_count_above_the_cap(spark, job_count, monkeypatch):
+    """Above the cap the distributed rounds keep their budget: the
+    bounded collect, the seed pick and at most 2 jobs per round."""
+    from datas_spark.operators import clustering as C
+
+    monkeypatch.setattr(C, "LLOYD_DRIVER_MAX_BYTES", 0)
+    df = _job_count_frame(spark)
+    assert job_count(lambda: C.kmeans_lloyd(df, "id", "v", k=5, n_rounds=3)) <= 2 * 3 + 2
+
+
+# ---------------------------------------------------------------------------
+# the driver twin of the Lloyd rounds: identical to the distributed rounds
+# under the cap, and the distributed rounds whenever a precondition fails
+# ---------------------------------------------------------------------------
+
+
+def _paths(monkeypatch):
+    """Record which Lloyd core each call runs: 'driver' or 'spark'."""
+    from datas_spark.operators import clustering as C
+
+    seen = []
+    for name, tag in (("_lloyd_driver", "driver"), ("_lloyd_rounds", "spark")):
+        fn = getattr(C, name)
+
+        def spy(*a, _fn=fn, _tag=tag, **kw):
+            seen.append(_tag)
+            return _fn(*a, **kw)
+
+        monkeypatch.setattr(C, name, spy)
+    return seen
+
+
+def _lloyd_both(spark, monkeypatch, rows, **kw):
+    """``kmeans_lloyd`` with the driver cap as shipped, then with the
+    distributed path forced; returns the two ``(labels, centroids)``
+    results and the path each call took."""
+    from datas_spark.operators import clustering as C
+
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    seen = _paths(monkeypatch)
+
+    def run():
+        asg, cents = C.kmeans_lloyd(df, "id", "v", **kw)
+        return (
+            {r.id: r.cluster for r in asg.collect()},
+            {r.cluster: r.centroid for r in cents.collect()},
+        )
+
+    twin = run()
+    # a negative cap is below every input, the empty one included
+    monkeypatch.setattr(C, "LLOYD_DRIVER_MAX_BYTES", -1)
+    spark_ = run()
+    return twin, spark_, seen
+
+
+def _random_rows(seed, n, dim, grid=None):
+    """Seeded dense vectors; with ``grid`` every component is one of
+    ``grid`` evenly spaced values, so distances tie often."""
+    import random
+
+    rng = random.Random(seed)
+    if grid:
+        draw = lambda: rng.randrange(grid) / grid - 0.5  # noqa: E731
+    else:
+        draw = lambda: rng.uniform(-1, 1)  # noqa: E731
+    return [(i * 7 + seed, [draw() for _ in range(dim)]) for i in range(n)]
+
+
+@pytest.mark.parametrize(
+    "seed,n,dim,k,rounds,grid",
+    [
+        (1, 200, 8, 5, 4, None),
+        (2, 300, 16, 12, 3, None),
+        (3, 150, 4, 6, 4, 3),   # a 3-value grid: exact distance ties
+        (4, 120, 2, 9, 5, 2),   # a 2-value grid: mostly identical points
+        (5, 40, 3, "auto", 3, None),
+    ],
+)
+def test_kmeans_lloyd_driver_twin_equals_distributed(spark, monkeypatch, seed, n, dim, k, rounds, grid):
+    rows = _random_rows(seed, n, dim, grid)
+    twin, dist, seen = _lloyd_both(spark, monkeypatch, rows, k=k, n_rounds=rounds)
+    assert seen == ["driver", "spark"]
+    assert twin == dist
+
+
+@pytest.mark.parametrize("k", [5, "auto"])
+def test_kmeans_lloyd_driver_twin_small_and_empty(spark, monkeypatch, k):
+    """k above the row count and an empty input give the same result on
+    both paths."""
+    rows = [(1, [0.1, 0.2]), (2, [-0.3, 0.5]), (3, [0.1, 0.2])]
+    twin, dist, seen = _lloyd_both(spark, monkeypatch, rows, k=k, n_rounds=2)
+    assert seen == ["driver", "spark"] and twin == dist
+    assert len(twin[1]) == min(3, 5 if k == 5 else 2)
+    monkeypatch.undo()
+    twin, dist, seen = _lloyd_both(spark, monkeypatch, [], k=k, n_rounds=2)
+    assert seen == ["driver", "spark"] and twin == dist == ({}, {})
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["null_vector", "null_component", "ragged_width", "duplicate_id", "overflow_range"],
+)
+def test_kmeans_lloyd_twin_preconditions_fall_back(spark, monkeypatch, case):
+    """Each broken precondition of the twin sends the call to the
+    distributed rounds, which return today's result."""
+    rows = _random_rows(9, 30, 3)
+    first = _by_seed_rank([i for i, _ in rows])[0]
+    rows = {
+        "null_vector": rows + [(10_001, None)],
+        "null_component": rows + [(10_001, [0.1, None, 0.2])],
+        "ragged_width": rows + [(10_001, [0.1, 0.2])],
+        "duplicate_id": rows + [(first, [0.3, 0.3, 0.3])],
+        # dim·(2·max|q|)² ≥ 2⁶³ although no distance actually overflows
+        "overflow_range": [(i, [1500.0 + x for x in v]) for i, v in rows],
+    }[case]
+    twin, dist, seen = _lloyd_both(spark, monkeypatch, rows, k=4, n_rounds=3)
+    assert seen == ["spark", "spark"]
+    assert twin == dist
+
+
+def test_kmeans_lloyd_overflowing_distance_raises_on_both_paths(spark, monkeypatch):
+    """Magnitudes whose squared distances overflow a long take the
+    distributed rounds, so ANSI mode raises exactly as before."""
+    from datas_spark.operators import clustering as C
+
+    if spark.conf.get("spark.sql.ansi.enabled") != "true":
+        pytest.skip("the long overflow raises only under ANSI mode")
+    df = spark.createDataFrame(
+        [(1, [3000.0]), (2, [-3000.0]), (3, [2999.0])], "id long, v array<double>"
+    )
+    for cap in (C.LLOYD_DRIVER_MAX_BYTES, -1):
+        monkeypatch.setattr(C, "LLOYD_DRIVER_MAX_BYTES", cap)
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            C.kmeans_lloyd(df, "id", "v", k=2, n_rounds=1)[0].collect()
+
+
+def test_kmeans_lloyd_twin_cap_boundary(spark, monkeypatch):
+    """Exactly the cap's points run on the driver; one more falls back."""
+    from datas_spark.operators import clustering as C
+
+    rows = _random_rows(12, 25, 4)
+    seen = _paths(monkeypatch)
+    monkeypatch.setattr(C, "LLOYD_DRIVER_MAX_BYTES", 24 * 8 * C.LLOYD_DRIVER_MAX_WIDTH)
+    got = {}
+    for n in (24, 25):
+        df = spark.createDataFrame(rows[:n], "id long, v array<double>")
+        asg, _ = C.kmeans_lloyd(df, "id", "v", k=3, n_rounds=2)
+        got[n] = {r.id: r.cluster for r in asg.collect()}
+    assert seen == ["driver", "spark"]
+    monkeypatch.setattr(C, "LLOYD_DRIVER_MAX_BYTES", 0)
+    for n in (24, 25):
+        df = spark.createDataFrame(rows[:n], "id long, v array<double>")
+        asg, _ = C.kmeans_lloyd(df, "id", "v", k=3, n_rounds=2)
+        assert {r.id: r.cluster for r in asg.collect()} == got[n]
+
+
+def test_kmeans_lloyd_twin_wide_vectors_stay_off_the_driver(spark, monkeypatch):
+    """A vector wider than LLOYD_DRIVER_MAX_WIDTH comes back NULL from
+    the collect, so the call falls back instead of collecting it."""
+    from datas_spark.operators import clustering as C
+
+    monkeypatch.setattr(C, "LLOYD_DRIVER_MAX_WIDTH", 2)
+    twin, dist, seen = _lloyd_both(spark, monkeypatch, _random_rows(3, 20, 3), k=3, n_rounds=2)
+    assert seen == ["spark", "spark"]
+    assert twin == dist
 
 
 def test_spark_round_is_half_up_on_the_decimal_string(spark):

@@ -179,13 +179,7 @@ def _import_time(stmts):
             yield st
 
 
-def test_public_functions_are_reached():
-    """Every public top-level function of ``datas_spark/`` is reached,
-    through the AST call graph of ``scripts/check_oracle.py``, from a
-    registered query's builder, ``datas_spark/pipeline/``, a
-    module-level statement or decorator, or a package name that
-    ``perfbench/``, ``scripts/``, ``bench.py`` or ``__spark_entry__.py``
-    loads. A name in a docstring or an ``__all__`` list does not count."""
+def _check_oracle():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -193,6 +187,42 @@ def test_public_functions_are_reached():
     )
     co = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(co)
+    return co
+
+
+@pytest.mark.parametrize(
+    "hunk,changed",
+    [
+        # a deleted function between a (lines 1-5) and b (8-12), seen
+        # from either end of the blank run between them
+        ("@@ -6,4 +5,0 @@\n-\n-def gone():\n-    pass\n-", set()),
+        ("@@ -8,3 +7,0 @@\n-def gone():\n-    pass\n-", set()),
+        # a deleted statement inside a, and a's deleted last statement
+        ("@@ -3 +2,0 @@\n-    x = 1", {"a"}),
+        ("@@ -6 +5,0 @@\n-    return x", {"a"}),
+        # added or replaced lines mark the node holding them
+        ("@@ -9 +9,2 @@\n-    y = 1\n+    y = 2\n+    z = 3", {"b"}),
+        ("@@ -6,0 +6,2 @@\n+\n+", set()),
+    ],
+)
+def test_touched_hunks_mark_only_changed_nodes(hunk, changed):
+    """``check_oracle --touched`` maps each ``git diff -U0`` hunk to the
+    nodes it changes: a pure deletion marks no neighbour it only
+    borders."""
+    co = _check_oracle()
+    diff = "diff --git a/pkg/mod.py b/pkg/mod.py\n--- a/pkg/mod.py\n+++ b/pkg/mod.py\n" + hunk
+    nodes = {"pkg.mod": [("a", 1, 5), ("b", 8, 12)]}
+    assert co._changed_nodes(diff, nodes) == {("pkg.mod", n) for n in changed}
+
+
+def test_public_functions_are_reached():
+    """Every public top-level function of ``datas_spark/`` is reached,
+    through the AST call graph of ``scripts/check_oracle.py``, from a
+    registered query's builder, ``datas_spark/pipeline/``, a
+    module-level statement or decorator, or a package name that
+    ``perfbench/``, ``scripts/``, ``bench.py`` or ``__spark_entry__.py``
+    loads. A name in a docstring or an ``__all__`` list does not count."""
+    co = _check_oracle()
     trees, edges, refs = co.call_graph()
 
     roots = {

@@ -519,16 +519,39 @@ def test_pq_codebooks_lloyd_equals_per_slice_kmeans_lloyd(spark, case):
         assert len(got) == 2 * 3
 
 
-def test_pq_codebooks_lloyd_job_count(spark, sf_dir, job_count):
-    """One seed collect, then one assignment + one collected moment
-    aggregate per round for all m subspaces together."""
+def test_pq_codebooks_lloyd_job_count(spark, sf_dir, job_count, monkeypatch):
+    """Under the driver cap a call runs ONE job, the bounded collect;
+    above it, the collect, one seed collect, then one assignment + one
+    collected moment aggregate per round for all m subspaces together."""
     from datas_spark.io.sources import read_table
+    from datas_spark.operators import clustering as C
 
     emb = read_table(spark, sf_dir, "embeddings")
-    n = job_count(
-        lambda: SIM.pq_codebooks_lloyd(emb, "vec_id", "embedding", 64, m=4, ks=8, n_rounds=2)
-    )
-    assert n <= 2 * 2 + 2
+
+    def run():
+        SIM.pq_codebooks_lloyd(emb, "vec_id", "embedding", 64, m=4, ks=8, n_rounds=2)
+
+    assert job_count(run) == 1
+    monkeypatch.setattr(C, "LLOYD_DRIVER_MAX_BYTES", 0)
+    assert job_count(run) <= 2 * 2 + 2
+
+
+@pytest.mark.parametrize("seed,n,dim,m,ks,rounds", [(21, 90, 8, 2, 4, 3), (22, 60, 12, 3, 8, 2), (23, 5, 8, 4, 8, 2)])
+def test_pq_codebooks_lloyd_driver_twin_equals_grouped_rounds(spark, monkeypatch, seed, n, dim, m, ks, rounds):
+    """The driver twin slices the collected vectors per subspace and
+    gives the codebooks of the grouped distributed rounds."""
+    from datas_spark.operators import clustering as C
+
+    _, df = _vecs(spark, n=n, dim=dim, seed=seed)
+    calls = []
+    real = C._lloyd_rounds
+    monkeypatch.setattr(C, "_lloyd_rounds", lambda *a, **kw: calls.append(1) or real(*a, **kw))
+    twin = _codebooks(SIM.pq_codebooks_lloyd(df, "id", "v", dim=dim, m=m, ks=ks, n_rounds=rounds))
+    assert not calls
+    monkeypatch.setattr(C, "LLOYD_DRIVER_MAX_BYTES", -1)
+    dist = _codebooks(SIM.pq_codebooks_lloyd(df, "id", "v", dim=dim, m=m, ks=ks, n_rounds=rounds))
+    assert calls == [1]
+    assert twin == dist and len(twin) == m * min(n, ks)
 
 
 def test_pq_topk_learned_full_oversample_equals_exact(spark):

@@ -47,11 +47,9 @@ DEFAULT_SCALE = 1_000_000
 # wide, so the int64 matrix the driver rounds over holds at most this
 # many bytes (131,072 points × 64 dims) and a wide LLM embedding never
 # reaches the driver at the row cap: it falls back to the distributed
-# rounds. On 4 local cores, 3 rounds over 10⁵ random points took 1.0 /
-# 0.9 s on the driver against 1.8 / 9.1 s distributed at dim 8 and k 5 /
-# 64, and 2.3 / 2.5 s against 5.6 / 41 s at dim 64 (mostly the collect;
-# the numpy rounds took at most 0.5 s). No measured size reached a
-# crossover, so the cap bounds driver memory, not time.
+# rounds. The crossover table in CHANGES.md (10³–10⁵ points × dim 8/64
+# × k 5/64, 4 local cores) found the driver faster at every size, so
+# the cap bounds driver memory, not time.
 LLOYD_DRIVER_MAX_BYTES = 64 << 20
 LLOYD_DRIVER_MAX_WIDTH = 64
 
@@ -153,9 +151,9 @@ def kmeans_lloyd(
       ``LLOYD_DRIVER_MAX_WIDTH``) and its preconditions hold: no NULL
       id, vector or component, one vector width, distinct
       ``md5(cast(id as string))`` values (so distinct ids and a seed
-      order that needs no tie-break), and ``dim·(2·max|q|)² < 2⁶³`` and
-      ``n·max|q| < 2⁶³`` (so every distance and moment sum is exact in
-      int64). The seed draw, every round and the ``k="auto"`` row
+      order that needs no tie-break), ``dim·(2·max|q|)² < 2⁵³`` (so
+      every distance is exact in float64) and ``n·max|q| < 2⁶³`` (so
+      every moment sum is exact in int64). The seed draw, every round and the ``k="auto"`` row
       count run on the driver; per call that is ONE Spark job, and
       the result equals the distributed rounds' exactly.
     - otherwise the distributed rounds, `_lloyd_rounds` — the reference
@@ -297,7 +295,7 @@ def _lloyd_collect(pts: DataFrame):
         return n, None
     vals = np.asarray(flat, dtype=np.int64)
     big = max(int(vals.max()), -int(vals.min())) if vals.size else 0
-    if dim * (2 * big) ** 2 >= 1 << 63 or n * big >= 1 << 63:
+    if dim * (2 * big) ** 2 >= 1 << 53 or n * big >= 1 << 63:
         return n, None
     order = np.asarray(pc.sort_indices(h))
     return n, vals.reshape(n, dim)[order]
@@ -314,21 +312,19 @@ def _lloyd_driver(q, cents, n_rounds: int) -> list:
     members becomes the exact floor mean ``Σq // n`` per dimension, and
     an empty cluster keeps its centroid. Distances are ranked as
     ``‖c‖² − 2·q·c`` per block of rows — the dropped ``‖q‖²`` is constant
-    per row — in float64 when ``dim·(2·max|q|)² < 2⁵³`` (every BLAS
-    partial sum is then an exact integer) and in int64 otherwise;
-    moment sums are int64 ``reduceat`` sums. `_lloyd_collect` bounds
-    both below 2⁶³, so every step is exact."""
+    per row — in float64 BLAS: `_lloyd_collect` keeps
+    ``dim·(2·max|q|)²`` below 2⁵³, so every partial sum is an exact
+    integer. Moment sums are int64 ``reduceat`` sums, which it keeps
+    below 2⁶³, so every step is exact."""
     import numpy as np
 
     cents = np.array(cents, dtype=np.int64)
     if not len(q):
         return cents.tolist()
-    big = int(np.abs(q).max()) if q.size else 0
-    dt = np.float64 if q.shape[1] * (2 * big) ** 2 < 1 << 53 else np.int64
-    qd = q.astype(dt)
+    qd = q.astype(np.float64)
     step = max(1, (1 << 20) // len(cents))
     for _ in range(n_rounds):
-        c = cents.astype(dt)
+        c = cents.astype(np.float64)
         norms = (c * c).sum(axis=1)
         lab = np.concatenate(
             [

@@ -72,7 +72,8 @@ def _nodes(tree):
         elif isinstance(st, ast.ClassDef):
             for m in st.body:
                 if isinstance(m, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                    yield f"{st.name}.{m.name}", m.lineno, m.end_lineno, m
+                    lo = min([m.lineno] + [d.lineno for d in m.decorator_list])
+                    yield f"{st.name}.{m.name}", lo, m.end_lineno, m
         elif isinstance(st, (ast.Assign, ast.AnnAssign)):
             targets = st.targets if isinstance(st, ast.Assign) else [st.target]
             for t in targets:
@@ -157,7 +158,10 @@ def _changed_nodes(diff, nodes):
     only a node whose span holds both, so a deletion between two
     functions marks neither. A deletion whose first non-blank line is
     indented continues the node holding line c, so dropping the last
-    statements of a function still marks that function."""
+    statements of a function still marks that function; one whose first
+    non-blank line is a decorator (``@`` after any indent) belongs to the
+    node starting at line c + 1, so dropping a function's decorators
+    still marks that function."""
     marks, path, hunk = [], None, None
     for line in diff.splitlines():
         if line.startswith("+++ "):
@@ -171,14 +175,18 @@ def _changed_nodes(diff, nodes):
                 hunk = [_module(path), start, count, None]
                 marks.append(hunk)
         elif hunk and hunk[2] == 0 and hunk[3] is None and line.startswith("-") and line[1:].strip():
-            hunk[3] = line[1:2].isspace()
+            hunk[3] = line[1:]
     changed = set()
-    for mod, start, count, indented in marks:
+    for mod, start, count, first in marks:
+        indented = first is not None and first[0].isspace()
+        decorator = first is not None and first.lstrip().startswith("@")
         for name, lo, hi in nodes.get(mod, ()):
             if count:
                 hit = lo <= start + count - 1 and start <= hi
             else:
-                hit = lo <= start and (start + 1 <= hi or (indented and start <= hi))
+                hit = (
+                    lo <= start and (start + 1 <= hi or (indented and start <= hi))
+                ) or (decorator and start + 1 == lo)
             if hit:
                 changed.add((mod, name))
     return changed

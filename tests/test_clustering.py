@@ -346,7 +346,14 @@ def test_kmeans_lloyd_driver_twin_small_and_empty(spark, monkeypatch, k):
 
 @pytest.mark.parametrize(
     "case",
-    ["null_vector", "null_component", "ragged_width", "duplicate_id", "overflow_range"],
+    [
+        "null_vector",
+        "null_component",
+        "ragged_width",
+        "duplicate_id",
+        "inexact_float_range",
+        "overflow_range",
+    ],
 )
 def test_kmeans_lloyd_twin_preconditions_fall_back(spark, monkeypatch, case):
     """Each broken precondition of the twin sends the call to the
@@ -358,6 +365,8 @@ def test_kmeans_lloyd_twin_preconditions_fall_back(spark, monkeypatch, case):
         "null_component": rows + [(10_001, [0.1, None, 0.2])],
         "ragged_width": rows + [(10_001, [0.1, 0.2])],
         "duplicate_id": rows + [(first, [0.3, 0.3, 0.3])],
+        # 2⁵³ ≤ dim·(2·max|q|)² < 2⁶³: a float64 distance could round
+        "inexact_float_range": [(i, [30.0 + x for x in v]) for i, v in rows],
         # dim·(2·max|q|)² ≥ 2⁶³ although no distance actually overflows
         "overflow_range": [(i, [1500.0 + x for x in v]) for i, v in rows],
     }[case]

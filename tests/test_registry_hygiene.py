@@ -197,9 +197,16 @@ def _check_oracle():
         # from either end of the blank run between them
         ("@@ -6,4 +5,0 @@\n-\n-def gone():\n-    pass\n-", set()),
         ("@@ -8,3 +7,0 @@\n-def gone():\n-    pass\n-", set()),
+        # a deleted decorated function before the blank run marks nothing
+        ("@@ -6,4 +5,0 @@\n-@F.udf\n-def gone():\n-    pass\n-", set()),
         # a deleted statement inside a, and a's deleted last statement
         ("@@ -3 +2,0 @@\n-    x = 1", {"a"}),
         ("@@ -6 +5,0 @@\n-    return x", {"a"}),
+        # b's deleted decorator (b now starts at its def), also with a
+        # multi-line call and an indented method decorator
+        ("@@ -8 +7,0 @@\n-@F.pandas_udf(DoubleType())", {"b"}),
+        ("@@ -8,3 +7,0 @@\n-@F.pandas_udf(\n-    DoubleType()\n-)", {"b"}),
+        ("@@ -8 +7,0 @@\n-    @staticmethod", {"b"}),
         # added or replaced lines mark the node holding them
         ("@@ -9 +9,2 @@\n-    y = 1\n+    y = 2\n+    z = 3", {"b"}),
         ("@@ -6,0 +6,2 @@\n+\n+", set()),
